@@ -168,10 +168,17 @@ def als_workflow(
     pruned = R.prune_sparse_entities(
         indexed, "BGGId", "UserId", min_game_ratings, min_user_ratings
     ).cache()
-    res = als_prediction(
-        pruned, user_col="UserId", item_col="BGGId", rating_col="Rating",
-        tune=tune, **als_kwargs,
-    )
+    try:
+        res = als_prediction(
+            pruned, user_col="UserId", item_col="BGGId", rating_col="Rating",
+            tune=tune, **als_kwargs,
+        )
+    finally:
+        # the metrics are eager and the recs below read only model factors,
+        # so nothing needs the cache past here; a long-lived session would
+        # otherwise pin one more copy per call (res.predictions recomputes
+        # from lineage if read)
+        pruned.unpersist()
     recs = recommend_for_all_users(res.model, k)
     named = recs.join(F.broadcast(games.select("BGGId", "Name")), "BGGId", "left")
     return named.select(

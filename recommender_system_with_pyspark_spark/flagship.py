@@ -72,7 +72,7 @@ def recommend_top_items(
     """ratings → prune → ALS → recommendForAllUsers(k) → explode → names.
 
     Returns (user_id, item_id, score, rank, p_name)."""
-    from pyspark.ml.recommendation import ALS
+    from .ml.models import als_estimator
 
     # cache the derived ratings: prune_sparse_entities consumes its input
     # three times (item counts, user counts, final semi-join) and ALS block
@@ -91,14 +91,14 @@ def recommend_top_items(
     # int32 id ceiling: compact long id spaces to dense int indexes when
     # needed (no-op passthrough otherwise) — SCALING.md round 7
     als_in, umap, imap = als_safe_ids(pruned)
-    als = ALS(
+    als = als_estimator(
+        spark,
         rank=rank,
         maxIter=max_iter,
         regParam=reg_param,
         userCol="user_id",
         itemCol="item_id",
         ratingCol="rating",
-        coldStartStrategy="drop",  # `bgrfunctions.py:182`
         seed=seed,
     )
     model = als.fit(als_in)
@@ -152,18 +152,16 @@ def item_factor_neighbors(
     over the same vectors.
 
     Returns (item_id, neighbor_id, sim, rank, p_name of neighbor)."""
-    from pyspark.ml.recommendation import ALS
-
+    from .ml.models import als_estimator
     from .operators.similarity import cosine_topk
 
     ratings = implicit_ratings(spark, sf_dir).cache()
     pruned = prune_sparse_entities(ratings, "item_id", "user_id", 2, 2)
     # int32 id ceiling: compact long id spaces when needed (SCALING.md r7)
     als_in, _umap, imap = als_safe_ids(pruned)
-    als = ALS(
-        rank=rank, maxIter=max_iter, regParam=reg_param,
-        userCol="user_id", itemCol="item_id", ratingCol="rating",
-        coldStartStrategy="drop", seed=seed,
+    als = als_estimator(
+        spark, rank=rank, maxIter=max_iter, regParam=reg_param,
+        userCol="user_id", itemCol="item_id", ratingCol="rating", seed=seed,
     )
     factors = als.fit(als_in).itemFactors.select(
         F.col("id").alias("vec_id"), F.col("features").alias("embedding")

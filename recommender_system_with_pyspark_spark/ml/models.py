@@ -59,6 +59,27 @@ def _cv(estimator: Estimator, evaluator, grid, seed: int, num_folds: int = 3, pa
     )
 
 
+def als_estimator(spark, **params):
+    """The package's one ALS constructor: ``coldStartStrategy="drop"``
+    (`bgrfunctions.py:182`) and one user block and one item block per
+    session core (``defaultParallelism``: the local core count, or the
+    total executor cores on a cluster) in place of MLlib's fixed 10, plus
+    ``params``.
+
+    ALS ships each factor to every block on the other side that holds one
+    of its ratings; under a popularity head that is nearly every block, so
+    shuffle and serialization grow with the block count, and 10-task
+    stages run in three waves on 4 cores. Seeded factors are
+    bit-reproducible for a fixed core count but differ across core counts
+    (the block layout seeds the factor init)."""
+    from pyspark.ml.recommendation import ALS
+
+    blocks = spark.sparkContext.defaultParallelism
+    return ALS(
+        coldStartStrategy="drop", numUserBlocks=blocks, numItemBlocks=blocks, **params
+    )
+
+
 def als_prediction(
     ratings: DataFrame,
     user_col: str = "user_id",
@@ -74,11 +95,14 @@ def als_prediction(
     rank∈{20,30} × regParam∈{0.1,0.01}, coldStartStrategy='drop', seed=1,
     selected by RMSE on a seeded 80/20 split.
 
-    Scale: every ALS iteration shuffles user/item factor blocks; rank and
-    ``spark.sql.shuffle.partitions`` are the levers. checkpointInterval=10
-    truncates the 20-iteration lineage."""
+    Scale: every ALS iteration shuffles user/item factor blocks, and ALS
+    partitions by its own block counts, not by
+    ``spark.sql.shuffle.partitions``. :func:`als_estimator` sizes them to
+    the session's cores (one wave of tasks, fewest factor copies), which
+    serves the TVS grid fits, the refit and ``tune=False`` alike; rank is
+    the other lever. checkpointInterval=10 truncates the 20-iteration
+    lineage."""
     from pyspark.ml.evaluation import RegressionEvaluator
-    from pyspark.ml.recommendation import ALS
     from pyspark.ml.tuning import ParamGridBuilder
 
     # checkpointInterval is a silent no-op without a checkpoint dir, and at
@@ -99,10 +123,9 @@ def als_prediction(
     ratings, _idmaps = dense_id_compaction(ratings, [user_col, item_col])
 
     train, test = ratings.randomSplit([0.8, 0.2], seed=seed)
-    als = ALS(
-        userCol=user_col, itemCol=item_col, ratingCol=rating_col,
-        maxIter=max_iter, coldStartStrategy="drop", seed=seed,
-        checkpointInterval=10,
+    als = als_estimator(
+        ratings.sparkSession, userCol=user_col, itemCol=item_col, ratingCol=rating_col,
+        maxIter=max_iter, seed=seed, checkpointInterval=10,
     )
     rmse_eval = RegressionEvaluator(metricName="rmse", labelCol=rating_col, predictionCol="prediction")
     r2_eval = RegressionEvaluator(metricName="r2", labelCol=rating_col, predictionCol="prediction")

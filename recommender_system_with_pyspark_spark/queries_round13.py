@@ -47,18 +47,16 @@ def _fit_flagship_als(spark: SparkSession, sf_dir: str):
     """The flagship fit (same data path and hyper-parameters as
     ``als_recommend`` — `flagship.py:recommend_top_items`), returning the
     MODEL so factors can be indexed instead of exhaustively scored."""
-    from pyspark.ml.recommendation import ALS
-
     from .flagship import als_safe_ids, implicit_ratings
+    from .ml.models import als_estimator
     from .operators.relational import prune_sparse_entities
 
     ratings = implicit_ratings(spark, sf_dir).cache()
     pruned = prune_sparse_entities(ratings, "item_id", "user_id", 2, 2)
     als_in, umap, imap = als_safe_ids(pruned)
-    model = ALS(
-        rank=8, maxIter=5, regParam=0.1, seed=1,
+    model = als_estimator(
+        spark, rank=8, maxIter=5, regParam=0.1, seed=1,
         userCol="user_id", itemCol="item_id", ratingCol="rating",
-        coldStartStrategy="drop",
     ).fit(als_in)
     return model
 

@@ -89,6 +89,30 @@ def test_als_workflow_end_to_end(tables):
     assert all(r["Name"] is not None for r in got)
 
 
+def test_als_workflow_releases_pruned_cache(tables, monkeypatch):
+    """The pruned ratings are cached for the fits only: a long-lived session
+    must not pin one more copy per call, and the returned recs (model
+    factors + broadcast names) must not need it."""
+    from pyspark import StorageLevel
+
+    pruned = []
+    prune = bgg.R.prune_sparse_entities
+
+    def capture(*args, **kwargs):
+        pruned.append(prune(*args, **kwargs))
+        return pruned[-1]
+
+    monkeypatch.setattr(bgg.R, "prune_sparse_entities", capture)
+    recs, res = bgg.als_workflow(
+        tables["user_ratings"], tables["games"],
+        min_game_ratings=20, min_user_ratings=5,
+        k=5, tune=False, ranks=(4,), reg_params=(0.1,), max_iter=5,
+    )
+    assert len(pruned) == 1
+    assert pruned[0].storageLevel == StorageLevel.NONE
+    assert recs.count() == res.model.userFactors.count() * 5
+
+
 def test_content_model_end_to_end(tables):
     """E3: features → PCA → logistic regression on the buckets label."""
     from recommender_system_with_pyspark_spark.ml.models import logistic_regression

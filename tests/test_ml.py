@@ -150,6 +150,54 @@ def test_als_prediction_and_topk(spark, sf_tiny):
     assert w_bad.count() == 0
 
 
+def test_als_blocks_sized_to_cores(spark, sf_tiny):
+    """Every ALS is built by ``als_estimator``: one user/item block per
+    session core, whether fitted alone or as the TVS refit."""
+    from recommender_system_with_pyspark_spark.flagship import implicit_ratings
+
+    cores = spark.sparkContext.defaultParallelism
+    als = MD.als_estimator(spark, rank=4)
+    assert (als.getNumUserBlocks(), als.getNumItemBlocks()) == (cores, cores)
+    assert als.getColdStartStrategy() == "drop"
+
+    ratings = implicit_ratings(spark, sf_tiny).cache()
+    try:
+        for tune in (False, True):
+            res = MD.als_prediction(
+                ratings, ranks=(2, 4), reg_params=(0.1,), max_iter=2, tune=tune
+            )
+            est = res.model._java_obj.parent()
+            assert (est.getNumUserBlocks(), est.getNumItemBlocks()) == (cores, cores), tune
+    finally:
+        ratings.unpersist()
+
+
+def test_seeded_als_factors_are_deterministic(spark):
+    """A seeded ALS gives bit-identical factors on refit and whatever the
+    input's partitioning (the block layout depends on the cores only)."""
+    from recommender_system_with_pyspark_spark.domain.golden import synthetic_ratings
+
+    df = synthetic_ratings(spark, 20_000, 600, 150).cache()
+    try:
+        def fit(frame):
+            model = MD.als_estimator(
+                spark, rank=10, maxIter=5, seed=1,
+                userCol="user_id", itemCol="item_id", ratingCol="rating",
+            ).fit(frame)
+            # bit_xor of per-row hashes: order-free and, unlike sum, no ANSI overflow
+            return [
+                f.agg(F.bit_xor(F.xxhash64("id", "features"))).first()[0]
+                for f in (model.userFactors, model.itemFactors)
+            ]
+
+        first = fit(df)
+        assert fit(df) == first
+        assert fit(df.repartition(3)) == first
+        assert fit(df.repartition(7, "item_id")) == first
+    finally:
+        df.unpersist()
+
+
 def test_metrics_report_shape(assembled):
     res = MD.logistic_regression(assembled, seed=1)
     report = MD.metrics_report({"logreg": res})
