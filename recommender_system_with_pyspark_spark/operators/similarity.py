@@ -1,9 +1,14 @@
 """Similarity search over embedding columns (north-star extension).
 
-- ``cosine_topk``      — exact brute-force top-k: the correctness baseline,
-                         oracle-testable. Query side broadcasts; candidate
-                         side streams — cost |Q|·|C| dot products, fully
-                         parallel, no shuffle of the candidate table.
+- ``cosine_topk``      — THE exact top-k: the query side collects into a
+                         broadcast anchor matrix, every candidate partition
+                         scores it with one numpy GEMM per Arrow batch and
+                         keeps a partial top-k per anchor; one window
+                         reduces the survivors. ``pos_col`` turns it into
+                         exact hard-negative mining. Oracle-testable.
+- ``hard_negatives_indexed`` — the same GEMM scorer over a prebuilt,
+                         cell-partitioned IVF index (``write_ivf_index``):
+                         the one indexed probe, for mining and ALS serving.
 - ``lsh_topk``         — BucketedRandomProjectionLSH on L2-normalized
                          vectors (Euclidean on the unit sphere is monotone
                          in cosine): the approximate scale path — candidate
@@ -13,11 +18,12 @@
                          classic ANN partitioning expressed as two joins.
 - ``embedding_near_dup`` — cosine-threshold near-duplicate pairs (native
                          pair join within blocks); ``_blocked`` is the
-                         distributed-exact block-matrix path (the scale
-                         default), ``_blas`` the opt-in broadcast fast path.
+                         distributed-exact block-matrix path.
 
-All distance math is native (``zip_with`` + ``aggregate`` fold) — JVM-side,
-no Python serde per row.
+Join-based paths score with native folds (``zip_with`` + ``aggregate``) —
+JVM-side, no Python serde per row; the GEMM paths run numpy in
+``mapInPandas``. Every top-k rounds sims to 6 dp and ranks by
+(desc sim, asc neighbor_id).
 """
 
 from __future__ import annotations
@@ -46,6 +52,19 @@ def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
     return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The shared top-k contract: per query_id, rank by (desc sim, asc
+    neighbor_id) and keep ranks 1..k as (query_id, neighbor_id, sim, rank)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "sim", "rank")
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -53,108 +72,56 @@ def cosine_topk(
     vec_col: str = "embedding",
     k: int = 10,
     exclude_self: bool = True,
-) -> DataFrame:
-    """Exact brute-force cosine top-k: (query_id, neighbor_id, sim, rank).
-
-    The query side is broadcast (ANN workloads have |Q| ≪ |C|); every
-    candidate partition scores locally, then one shuffle on query_id for the
-    per-query top-k window. Deterministic tie-break on neighbor id.
-
-    Norms are precomputed per row before the join (one fold per vector
-    instead of two folds per PAIR — at |Q|·|C| pairs that is the difference
-    between O((Q+C)·d) and O(Q·C·d) extra work)."""
-    from pyspark.sql import Window
-
-    q = _as_double(queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")), "_qv")
-    q = q.withColumn("_qn", F.greatest(_norm(F.col("_qv")), F.lit(1e-30)))
-    c = _as_double(candidates.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")), "_cv")
-    c = c.withColumn("_cn", F.greatest(_norm(F.col("_cv")), F.lit(1e-30)))
-    pairs = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id") if exclude_self else F.lit(True))
-    scored = pairs.withColumn(
-        "sim", F.round(_dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
-
-
-def hard_negatives(
-    queries: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pos_col: str = "label",
-    k: int = 10,
+    pos_col: "str | None" = None,
     max_broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
-    """Contrastive HARD-NEGATIVE mining — the embedding-training data op:
-    per query vector, the ``k`` most-similar candidates whose ``pos_col``
-    DIFFERS from the query's (same value = positive pair, excluded;
-    NULL is distinct from every label, both engines' IS DISTINCT FROM
-    semantics). These near-miss negatives are what make contrastive /
-    triplet objectives learn boundaries instead of trivia — random
-    negatives (``sampling.negative_sample``) are too easy by the first
-    epoch.
+    """Exact cosine top-k: (query_id, neighbor_id, sim, rank).
 
-    Same plan shape and scoring conventions as ``cosine_topk`` (broadcast
-    query side, per-row norms precomputed, round-to-6, deterministic
-    neighbor-id tie-break), so the brute-force SQL oracle attaches
-    directly. This is the EXACT/oracle path: cost is |Q|·|C| pair scores
-    and the query side is broadcast, so it is guarded by
-    ``max_broadcast_rows`` — mining negatives for a full training set
-    (every anchor as a query) must go through ``hard_negatives_ann``
-    (ANN over-fetch, sub-linear candidate generation) or
-    ``hard_negatives_ivf`` (provably exact, cell-pruned). A 10M-anchor
-    frame raises here instead of OOM-ing the executors.
+    The query side collects into an L2-normalized anchor matrix and
+    broadcasts (ANN workloads have |Q| ≪ |C|); each candidate partition
+    scores ``batch @ Q.T`` with one numpy GEMM per Arrow batch, masks
+    excluded pairs, and keeps its per-batch top-k per anchor, so the final
+    (desc sim, asc neighbor_id) window reduces anchors × batches × k
+    survivors instead of every scored pair. Sims are rounded to 6 dp, so
+    the brute-force SQL oracle attaches. Cost is |Q|·|C| multiply-adds at
+    BLAS speed and one candidate scan for the whole query batch.
 
-    Returns (query_id, neighbor_id, sim, rank)."""
-    from pyspark.sql import Window
+    ``exclude_self`` drops pairs whose ids are equal; pass False when
+    queries and candidates live in different id spaces. ``pos_col`` makes
+    this contrastive HARD-NEGATIVE mining: only candidates whose label
+    DIFFERS from the query's are ranked (NULL is distinct from every
+    label but not from NULL — IS DISTINCT FROM semantics). These
+    near-miss negatives are what contrastive / triplet objectives learn
+    boundaries from; random negatives (``sampling.negative_sample``) are
+    too easy by the first epoch.
 
-    n_q = queries.count()
-    if n_q > max_broadcast_rows:
-        raise ValueError(
-            f"{n_q} query vectors exceed the broadcast ceiling "
-            f"({max_broadcast_rows}); brute-force all-pairs mining is "
-            "linear in |queries|x|candidates| — use hard_negatives_blas "
-            "(GEMM-scored, scan-bound), hard_negatives_ann (ANN "
-            "over-fetch) or hard_negatives_ivf (exact, cell-pruned) for "
-            "full-training-set anchors"
-        )
-    q = _as_double(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-            F.col(pos_col).alias("_qp"),
+    The anchor matrix broadcasts, so more than ``max_broadcast_rows``
+    query rows raise instead of OOM-ing the executors: shard the anchors,
+    or mine a full training set through ``hard_negatives_ann`` (ANN
+    over-fetch), ``ivf_topk_exact`` (exact, cell-pruned) or
+    ``hard_negatives_indexed`` (prebuilt index). An empty query frame
+    raises too."""
+    q_ids, q_mat, q_code, codes = _collect_anchor_matrix(
+        queries, id_col, vec_col, pos_col, max_broadcast_rows,
+        "shard the anchors, or mine at training-set scale with "
+        "hard_negatives_ann (ANN over-fetch), ivf_topk_exact (exact, "
+        "cell-pruned) or hard_negatives_indexed (prebuilt index)",
+    )
+    score = _gemm_partial_topk_scorer(
+        queries.sparkSession.sparkContext.broadcast(
+            (q_ids, q_mat, q_code, codes, None, exclude_self)
         ),
-        "_qv",
+        k,
     )
-    q = q.withColumn("_qn", F.greatest(_norm(F.col("_qv")), F.lit(1e-30)))
-    c = _as_double(
-        candidates.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
-            F.col(pos_col).alias("_cp"),
-        ),
-        "_cv",
+    cols = [F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")]
+    if pos_col is not None:
+        cols.append(F.col(pos_col).alias("_p"))
+    # the output keeps each side's id type (ALS factor ids are int)
+    q_type, c_type = (df.schema[id_col].dataType.simpleString() for df in (queries, candidates))
+    partial = _as_double(candidates.select(*cols), "_v").mapInPandas(
+        score, f"query_id {q_type}, neighbor_id {c_type}, sim double"
     )
-    c = c.withColumn("_cn", F.greatest(_norm(F.col("_cv")), F.lit(1e-30)))
-    pairs = c.join(
-        F.broadcast(q),
-        (F.col("query_id") != F.col("neighbor_id"))
-        & ~F.col("_qp").eqNullSafe(F.col("_cp")),
-    )
-    scored = pairs.withColumn(
-        "sim", F.round(_dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _rank_topk(partial, k)
 
 
 def hard_negatives_ann(
@@ -169,12 +136,12 @@ def hard_negatives_ann(
     **ann_kwargs,
 ) -> DataFrame:
     """Hard-negative mining at TRAINING-SET scale — the ANN over-fetch
-    path ``hard_negatives``' guard points at: generate the top
+    path the ``cosine_topk`` guard points at: generate the top
     ``k·overfetch`` approximate neighbors per query (``ivf_topk`` /
     ``lsh_topk`` — bucketed candidate generation, never all-pairs), join
     labels back on the bounded |Q|·k·overfetch candidate set, drop
     same-label pairs (null-safe, IS DISTINCT FROM semantics), re-rank,
-    keep ``k``. Same output contract as ``hard_negatives``:
+    keep ``k``. Same output contract as ``cosine_topk(pos_col=...)``:
     (query_id, neighbor_id, sim, rank), round-to-6 sims, neighbor-id
     tie-break.
 
@@ -187,7 +154,7 @@ def hard_negatives_ann(
     measured by the ``hard_negative_mining_ann`` recall-report entry
     (the ``ann_recall_report`` pattern); raise ``overfetch`` when probed
     neighborhoods are label-pure. For a provably exact answer with cell
-    pruning use ``hard_negatives_ivf``.
+    pruning use ``ivf_topk_exact(pos_col=...)``.
 
     DEPLOYMENT NOTE (measured, SCALING.md round 10): with ``method='ivf'``
     the k-means fit runs INSIDE this call — 1068 s of 1097 at sf100 was
@@ -196,8 +163,6 @@ def hard_negatives_ann(
     ``hard_negatives_indexed`` (pure partition-pruned probe, label filter
     inside the probe scoring, no over-fetch slack); this function remains
     the zero-setup form for one-shot batches."""
-    from pyspark.sql import Window
-
     if overfetch < 1:
         raise ValueError("overfetch must be >= 1")
     if method == "ivf":
@@ -217,12 +182,7 @@ def hard_negatives_ann(
         .join(c_labels, "neighbor_id")
         .filter(~F.col("_qp").eqNullSafe(F.col("_cp")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        negs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _rank_topk(negs, k)
 
 
 def _collect_anchor_matrix(
@@ -231,16 +191,17 @@ def _collect_anchor_matrix(
     vec_col: str,
     pos_col: "str | None",
     max_broadcast_rows: int,
-    caller: str,
+    advice: str,
 ):
-    """Driver-side anchor prep shared by the GEMM mining paths: ids,
+    """Driver-side anchor prep shared by the GEMM paths: ids,
     L2-normalized float64 matrix, and FACTORIZED label codes (the
     same-label mask is then a vectorized int64 comparison instead of an
     object-dtype Python-level one — measured 100x on a (chunk x anchors)
     mask; one shared code for all NULLs implements eqNullSafe exactly).
-    ``pos_col=None`` (pure ANN serving, no label exclusion) returns
-    ``q_code=None`` — the scorer skips the label mask entirely.
-    Guarded by ``max_broadcast_rows`` — the anchor matrix broadcasts."""
+    ``pos_col=None`` (no label exclusion) returns ``q_code=None`` — the
+    scorer skips the label mask entirely. Guarded by
+    ``max_broadcast_rows`` — the anchor matrix broadcasts; ``advice``
+    completes the error message."""
     import numpy as np
     import pandas as pd
 
@@ -251,8 +212,7 @@ def _collect_anchor_matrix(
     n_q = len(q)
     if n_q > max_broadcast_rows:
         raise ValueError(
-            f"{n_q} anchors exceed the broadcast ceiling ({max_broadcast_rows}); "
-            f"shard the anchor set and run {caller} per shard"
+            f"{n_q} anchors exceed the broadcast ceiling ({max_broadcast_rows}); {advice}"
         )
     if n_q == 0:
         raise ValueError("empty anchor frame")
@@ -273,8 +233,8 @@ def _collect_anchor_matrix(
 
 
 def _gemm_partial_topk_scorer(b, k: int):
-    """mapInPandas scorer shared by ``hard_negatives_blas`` (full catalog
-    scan) and ``hard_negatives_indexed`` (partition-pruned index scan):
+    """mapInPandas scorer shared by ``cosine_topk`` (full candidate scan)
+    and ``hard_negatives_indexed`` (partition-pruned index scan):
     per Arrow batch, one numpy GEMM against the broadcast anchor matrix,
     -inf masking of self pairs and same-label pairs (null-safe via
     factorized codes); then a per-batch top-k per anchor (argpartition),
@@ -315,9 +275,7 @@ def _gemm_partial_topk_scorer(b, k: int):
     ANCHOR_TILE = 1024
 
     def score(batches):
-        payload = b.value
-        ids, mat, qc, code_of, cell_mask = payload[:5]
-        exclude_self = payload[5] if len(payload) > 5 else True
+        ids, mat, qc, code_of, cell_mask, exclude_self = b.value
         for chunk in batches:
             C = np.stack(chunk["_v"].to_numpy()).astype("float64")
             C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
@@ -397,102 +355,10 @@ def _gemm_partial_topk_scorer(b, k: int):
                             }
                         )
                     )
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                {"query_id": pd.Series(dtype="int64"),
-                 "neighbor_id": pd.Series(dtype="int64"),
-                 "sim": pd.Series(dtype="float64")}
-            )
+            if outs:
+                yield pd.concat(outs)
 
     return score
-
-
-def hard_negatives_blas(
-    queries: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pos_col: str = "label",
-    k: int = 10,
-    max_broadcast_rows: int = 2_000_000,
-) -> DataFrame:
-    """GEMM-scored hard-negative mining — the THROUGHPUT scale path: the
-    anchor matrix (ids, L2-normalized vectors, labels) broadcasts (hard
-    ``max_broadcast_rows`` ceiling, the ``embedding_near_dup_blas``
-    pattern), each catalog partition scores ``chunk @ Q.T`` with one
-    numpy GEMM, masks self/same-label pairs (null-safe: two NULL labels
-    are NOT distinct, so the pair is excluded), keeps its per-partition
-    top-k per anchor (argpartition), and a final window reduces the
-    ``partitions × k`` survivors per anchor to the global top-k.
-
-    Why this exists next to ``hard_negatives_ann``/``_ivf``: per-pair
-    cost. The expression-fold scorer runs interpreted lambdas (~1 µs per
-    64-d pair — measured 199 ms/anchor on a 200k catalog, ~55 h for 1M
-    anchors); BLAS does the same FLOPs at memory bandwidth. One catalog
-    scan serves the whole anchor batch, so mining a full training set is
-    scan-bound, not pair-bound. Exact (same round-to-6 + neighbor-id
-    tie-break as ``hard_negatives``, so the brute-force SQL oracle
-    attaches); combine with IVF cell partitioning when even one scan is
-    too much.
-
-    Returns (query_id, neighbor_id, sim, rank)."""
-    from pyspark.sql import Window
-
-    q_ids, q_mat, q_code, codes = _collect_anchor_matrix(
-        queries, id_col, vec_col, pos_col, max_broadcast_rows,
-        "hard_negatives_blas (one catalog scan each), or use hard_negatives_ann",
-    )
-    sc = queries.sparkSession.sparkContext
-    score = _gemm_partial_topk_scorer(
-        sc.broadcast((q_ids, q_mat, q_code, codes, None)), k
-    )
-
-    cand = _as_double(
-        candidates.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), F.col(pos_col).alias("_p")
-        ),
-        "_v",
-    )
-    partial = cand.mapInPandas(score, "query_id long, neighbor_id long, sim double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
-
-
-def hard_negatives_ivf(
-    queries: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pos_col: str = "label",
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    seed: int = 1,
-) -> DataFrame:
-    """PROVABLY EXACT hard-negative mining with IVF cell pruning — the
-    scale path whose output is bit-identical to ``hard_negatives``' brute
-    force (so the same DuckDB oracle attaches): ``ivf_topk_exact`` with
-    the same-label exclusion pushed into both probe phases. The
-    triangle-inequality radius bound prunes cells that provably cannot
-    hold a different-label vector displacing the provisional top-k (the
-    bound dominates every member, so a fortiori every different-label
-    member); with clustered data the plan reads ~``n_probe/n_cells`` of
-    the candidates, and at 100 TB the cell id is a partition key
-    (``write_ivf_index``) so pruned cells are pruned FILE READS."""
-    return ivf_topk_exact(
-        queries,
-        candidates,
-        id_col,
-        vec_col,
-        k=k,
-        n_cells=n_cells,
-        n_probe=n_probe,
-        seed=seed,
-        pos_col=pos_col,
-    )
 
 
 def lsh_topk(
@@ -509,16 +375,16 @@ def lsh_topk(
     L2-normalized vectors. Bucket join generates candidates; exact cosine
     re-ranks. Recall is tunable via bucket_length / num_hash_tables.
 
-    The re-rank recomputes cosine on the ORIGINAL arrays with the same fold
-    (and the same round-to-6) as ``cosine_topk`` — so whenever the bucket
-    join achieves full candidate recall, the output is hash-identical to
-    brute force, and the brute-force SQL oracle attaches to this operator
+    The re-rank recomputes cosine on the ORIGINAL arrays with the native
+    fold (the oracle's sequential summation) and the round-to-6 of
+    ``cosine_topk`` — so whenever the bucket join achieves full candidate
+    recall, the output is hash-identical to brute force, and the
+    brute-force SQL oracle attaches to this operator
     (the `minhash_near_dup` trick, operators/dedup.py:101). Deriving sim
     from the LSH Euclidean distance (1 - d²/2 on unit vectors) is monotone-
     equivalent but differs in final-ulp rounding; never use it for output."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
     from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import Window
 
     def prep(df: DataFrame, label: str) -> DataFrame:
         v = _as_double(df.select(F.col(id_col).alias(label), F.col(vec_col).alias("_arr")), "_arr")
@@ -546,12 +412,7 @@ def lsh_topk(
             6,
         ).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def ivf_topk(
@@ -602,12 +463,7 @@ def ivf_topk(
     )
     pairs = probed.join(cand_cells, "_cell").filter(F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.withColumn("sim", F.round(cosine(F.col("_qv"), F.col("_cv")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def _euclid(a: Column, b: Column) -> Column:
@@ -660,9 +516,9 @@ def ivf_topk_exact(
 
     With ``pos_col`` set, pairs whose labels match (null-safe equality,
     both engines' IS DISTINCT FROM) are excluded from BOTH phases — this
-    is exact hard-negative mining with cell pruning (``hard_negatives``'s
-    scale path). The radius bound stays sound under the extra filter:
-    ``bound_sim`` upper-bounds the similarity of ANY cell member, hence of
+    is exact hard-negative mining with cell pruning (the scale path of
+    ``cosine_topk(pos_col=...)``). The radius bound stays sound under the
+    extra filter: ``bound_sim`` upper-bounds the similarity of ANY cell member, hence of
     any different-label member, so a pruned cell still provably cannot
     displace the provisional different-label top-k.
     """
@@ -755,66 +611,7 @@ def ivf_topk_exact(
     )
 
     scored = pairs1.unionByName(pairs2).withColumn("sim", F.round(F.col("_s"), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
-
-
-def embedding_near_dup_blas(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    max_broadcast_rows: int = 2_000_000,
-) -> DataFrame:
-    """Cosine-threshold near-dup pairs via broadcast + BLAS matmul — the
-    fast exact path when ONE side fits in a broadcast (~2M×64 f32 ≈ 500 MB).
-
-    The full L2-normalized candidate matrix is broadcast; each partition of
-    the row side computes chunk @ B.T with numpy (Arrow-batched mapInPandas)
-    and emits pairs (id_a < id_b) above threshold. ~30× faster than the
-    per-pair expression fold; beyond broadcast size, fall back to LSH/IVF
-    candidate generation + this as the verifier within blocks."""
-    import numpy as np
-    import pandas as pd
-
-    n = df.count()
-    if n > max_broadcast_rows:
-        raise ValueError(
-            f"{n} vectors exceed the broadcast ceiling ({max_broadcast_rows}); "
-            "generate candidates with lsh_topk/ivf_topk and verify with "
-            "embedding_near_dup on blocks"
-        )
-    base = _as_double(
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")), "_v"
-    )
-    pdf = base.toPandas()
-    ids = pdf["_id"].to_numpy()
-    mat = np.stack(pdf["_v"].to_numpy()).astype("float64")
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    sc = df.sparkSession.sparkContext
-    b_ids = sc.broadcast(ids)
-    b_mat = sc.broadcast(mat)
-
-    def score(batches):
-        cand_ids, cand = b_ids.value, b_mat.value
-        for chunk in batches:
-            rows = np.stack(chunk["_v"].to_numpy()).astype("float64")
-            rows /= np.linalg.norm(rows, axis=1, keepdims=True)
-            sims = rows @ cand.T
-            row_ids = chunk["_id"].to_numpy()
-            out_a, out_b, out_s = [], [], []
-            for i, rid in enumerate(row_ids):
-                mask = (np.round(sims[i], 6) >= threshold) & (cand_ids > rid)
-                out_a.extend([rid] * int(mask.sum()))
-                out_b.extend(cand_ids[mask].tolist())
-                out_s.extend(np.round(sims[i][mask], 6).tolist())
-            yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "sim": out_s})
-
-    return base.mapInPandas(score, "id_a long, id_b long, sim double")
+    return _rank_topk(scored, k)
 
 
 def _block_pair_scorer(threshold: float):
@@ -882,8 +679,6 @@ def embedding_near_dup_blocked(
     O(n²d / C²) per task over C(C+1)/2 tasks; communication is O(n·C)
     vector replications — at 100 TB pick C ≈ sqrt(cluster cores) so blocks
     fit executor memory, or pre-filter candidates with lsh_topk/ivf_topk.
-    ``embedding_near_dup_blas`` stays as an opt-in fast path when one side
-    is known to fit in a broadcast.
 
     Returns (id_a, id_b, sim) with id_a < id_b, sim >= threshold."""
     base = _as_double(
@@ -926,9 +721,9 @@ def embedding_near_dup(
     """Cosine-threshold near-duplicate pairs (id_a < id_b, sim >= threshold),
     as a pure-native pair join with precomputed norms.
 
-    Exact within blocks; at scale generate candidates with lsh_topk/ivf_topk
-    first and verify here (or use embedding_near_dup_blas when one side fits
-    in a broadcast)."""
+    Exact within blocks; at scale use ``embedding_near_dup_blocked`` or
+    ``semantic_dedup_pairs``, or generate candidates with
+    lsh_topk/ivf_topk first and verify here."""
     base = _as_double(
         df.select(
             F.col(id_col).alias("_id"),
@@ -966,7 +761,7 @@ def write_ivf_index(
     that turns a probe into a partition-pruned scan (read n_probe/n_cells
     of the data; at 100 TB that is the difference between touching 100 TB
     and ~6 TB). Returns the coarse centroids (n_cells × dim — driver-small
-    by construction) for :func:`ivf_probe` / :func:`ivf_probe_batch`.
+    by construction) for :func:`ivf_probe` / :func:`hard_negatives_indexed`.
 
     The centroids are ALSO persisted inside the index as an
     underscore-prefixed sidecar (``{path}/_centers`` — parquet readers
@@ -1157,126 +952,6 @@ def read_ivf_centers(spark, path: str) -> list[list[float]]:
     return [list(r["center"]) for r in rows]
 
 
-def ivf_probe_batch(
-    spark,
-    path: str,
-    queries: DataFrame,
-    centers: "list[list[float]] | None" = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_probe: int = 4,
-    pos_col: str | None = None,
-    max_broadcast_rows: int = 2_000_000,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Batch ANN top-k against a PREBUILT partitioned IVF index — the
-    probe-many half of the contract (``ivf_probe`` is the single-vector
-    form; this is the training-set form a miner calls). No KMeans fit
-    happens here: centroids come from the index sidecar (or are passed
-    in), queries rank cells by centroid cosine, and the index scan is
-    restricted to the UNION of probed cells with a literal ``IN`` filter —
-    a PartitionFilter, so cells no query probes are never listed, opened,
-    or read (plan-tested). Per-query work stays bounded to its own
-    ``n_probe`` cells by the probe join.
-
-    With ``pos_col`` set, the index must have been written with that
-    column (``write_ivf_index(extra_cols=...)``) and the query frame must
-    carry it: same-label pairs (null-safe, IS DISTINCT FROM semantics) are
-    excluded BEFORE ranking — hard-negative mining without any
-    over-fetch-then-refilter slack (the label filter runs inside the probe
-    scoring, so recall loss comes only from unprobed cells).
-
-    Scale shape: the literal cell set is ≤ n_cells ints collected from a
-    |Q|·n_probe-row frame; a LOCALIZED query batch prunes most of the
-    index at file-listing time, while a batch that probes every cell
-    degrades to one full index scan — never more. The query side
-    BROADCASTS (|Q|·n_probe rows), so the batch is guarded by
-    ``max_broadcast_rows`` — the same hard ceiling as ``hard_negatives``;
-    beyond it, mining workloads go to ``hard_negatives_indexed`` (GEMM
-    scorer, per-batch partial top-k, anchor sharding composes with the
-    pruning). Output contract matches ``cosine_topk``: (query_id,
-    neighbor_id, sim, rank), round-to-6, neighbor-id tie-break.
-
-    Cell-ranking tie semantics vs ``hard_negatives_indexed``: both break
-    EXACT centroid-similarity ties to the lower cell id ((desc _csim,
-    asc _cell) window here; stable argsort there), but this path scores
-    centroids with the SQL fold (sequential summation) while the indexed
-    miner uses one float64 numpy matmul (blocked summation) — at
-    near-ties the last-ulp difference can legitimately pick different
-    probed cells. Both choices are valid ANN probes of the same index;
-    only the exact configuration (n_probe = n_cells) is contractually
-    identical between the two."""
-    from pyspark.sql import Window
-
-    if centers is None:
-        centers = read_ivf_centers(spark, path)
-    n_q = queries.count()
-    if n_q > max_broadcast_rows:
-        raise ValueError(
-            f"{n_q} query vectors exceed the broadcast ceiling "
-            f"({max_broadcast_rows}); the probe side broadcasts |Q|·n_probe "
-            "rows — shard the batch or use hard_negatives_indexed (GEMM "
-            "probe, anchor sharding composes with the partition pruning)"
-        )
-    centers_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centers)], "_cell int, _center array<double>"
-    )
-
-    q_cols = [F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")]
-    if pos_col is not None:
-        q_cols.append(F.col(pos_col).alias("_qp"))
-    q = _as_double(queries.select(*q_cols), "_qv").withColumn(
-        "_qn", F.greatest(_norm(F.col("_qv")), F.lit(1e-30))
-    )
-    qc = q.crossJoin(F.broadcast(centers_df)).withColumn(
-        "_csim", cosine(F.col("_qv"), F.col("_center"))
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("_csim"), F.asc("_cell"))
-    probed = (
-        qc.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= n_probe)
-        .select("query_id", "_qv", "_qn", "_cell", *(["_qp"] if pos_col else []))
-    )
-    # ≤ n_cells ints to the driver: the literal IN list is what becomes a
-    # PartitionFilter on the index scan (static pruning — file listing for
-    # unprobed cells never happens)
-    cells = sorted(r["_cell"] for r in probed.select("_cell").distinct().collect())
-    scan = spark.read.parquet(path).filter(F.col("cell").isin(cells))
-    if pos_col is not None and pos_col not in scan.columns:
-        raise ValueError(
-            f"index at {path} does not carry {pos_col!r}; rebuild with "
-            f"write_ivf_index(extra_cols=({pos_col!r},))"
-        )
-    scan = _as_double(scan.withColumnRenamed("embedding", "_cv"), "_cv").withColumn(
-        "_cn", F.greatest(_norm(F.col("_cv")), F.lit(1e-30))
-    )
-    # exclude_self=False is the CROSS-MODAL probe mode (queries and index
-    # live in different id spaces — e.g. ALS user factors probing the
-    # item-factor index): a user id numerically equal to an item id must
-    # NOT be dropped as a self-pair there
-    pair_ok = (
-        F.col("query_id") != F.col("neighbor_id") if exclude_self else F.lit(True)
-    )
-    if pos_col is not None:
-        pair_ok = pair_ok & ~F.col("_qp").eqNullSafe(F.col(pos_col))
-    # broadcast the probed side: |Q|·n_probe rows by construction (an ANN
-    # query batch), vs an index scan that must NOT shuffle — a plain join
-    # here hashes the whole pruned scan across a ≤ n_cells-key exchange.
-    # Batches beyond broadcast size are mining workloads: route them to
-    # hard_negatives_indexed (GEMM scorer + per-batch partial top-k).
-    pairs = scan.join(F.broadcast(probed), probed["_cell"] == scan["cell"]).filter(pair_ok)
-    scored = pairs.withColumn(
-        "sim", F.round(_dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
-
-
 def hard_negatives_indexed(
     spark,
     path: str,
@@ -1298,14 +973,14 @@ def hard_negatives_indexed(
     column carried (``write_ivf_index(extra_cols=(pos_col,))``); each
     mining call is then a pure probe.
 
-    Plan shape — the ``hard_negatives_blas`` GEMM scorer fused with
+    Plan shape — the ``cosine_topk`` GEMM scorer fused with
     partition pruning (the first, expression-fold implementation of this
     probe measured 510.6 s for 1000 anchors at the sf100 catalog: a
     64-key cell join shuffled the scan and the top-k window sorted every
     scored pair — both costs this shape deletes):
 
-    1. anchors collect to the driver (``max_broadcast_rows`` guard, the
-       blas ceiling) and cell ranking runs as ONE numpy matmul against the
+    1. anchors collect to the driver (the ``max_broadcast_rows`` guard of
+       ``cosine_topk``) and cell ranking runs as ONE numpy matmul against the
        sidecar centroids — no crossJoin, no ranking window;
     2. the index scan carries a literal ``IN`` over the UNION of probed
        cells — a PartitionFilter, so unprobed cells are unlistened file
@@ -1319,23 +994,22 @@ def hard_negatives_indexed(
     No over-fetch parameter: the label filter runs BEFORE ranking, so
     ``k`` means ``k`` and recall loss comes only from unprobed cells —
     raise ``n_probe`` to trade scan fraction for recall; at
-    ``n_probe = n_cells`` the output provably equals ``hard_negatives``
+    ``n_probe = n_cells`` the output provably equals ``cosine_topk``
     brute force (the ``hard_negative_mining_indexed_full`` oracle entry
     hash-checks exactly that through this plan). Recall of the pruned
     deployment is measured by ``hard_negative_mining_indexed``.
     Anchor batches beyond the broadcast ceiling: shard the anchors — each
     shard re-probes only its own cells, so sharding composes with the
-    pruning (unlike the full-scan blas path, where every shard pays a
-    whole catalog scan).
+    pruning (unlike ``cosine_topk``, where every shard pays a whole
+    catalog scan).
 
     ``pos_col=None`` + ``exclude_self=False`` is the pure ANN-serving
-    mode (round 13): no label mask, no self mask — the configuration the
-    MIPS-reduced ALS recommend path probes with, where query ids (users)
-    and index ids (items) live in different id spaces and an id
+    mode: no label mask, no self mask — the configuration the
+    MIPS-reduced ALS recommend path (``models.recommend_topk_ann``) and
+    its ``als_recommend_ann`` recall report probe with, where query ids
+    (users) and index ids (items) live in different id spaces and an id
     collision is not a self pair."""
     import numpy as np
-
-    from pyspark.sql import Window
 
     if n_probe < 1:
         raise ValueError("n_probe must be >= 1")
@@ -1343,7 +1017,8 @@ def hard_negatives_indexed(
         centers = read_ivf_centers(spark, path)
     q_ids, q_mat, q_code, codes = _collect_anchor_matrix(
         queries, id_col, vec_col, pos_col, max_broadcast_rows,
-        "hard_negatives_indexed (each shard probes only its own cells)",
+        "shard the anchors and run hard_negatives_indexed per shard (each "
+        "shard probes only its own cells)",
     )
     cmat = np.array(centers, dtype="float64")
     cmat /= np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-30)
@@ -1378,12 +1053,7 @@ def hard_negatives_indexed(
         k,
     )
     partial = scan.mapInPandas(score, "query_id long, neighbor_id long, sim double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _rank_topk(partial, k)
 
 
 def ivf_recall_curve(
@@ -1434,7 +1104,7 @@ def ivf_recall_curve(
 
     q_ids, q_mat, _, _ = _collect_anchor_matrix(
         anchors, id_col, vec_col, pos_col, max_broadcast_rows,
-        "ivf_recall_curve (sample fewer held-out anchors)",
+        "sample fewer held-out anchors for ivf_recall_curve",
     )
     cmat = np.array(centers, dtype="float64")
     cmat /= np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-30)

@@ -1,7 +1,7 @@
 """Round-10 query surface (VERDICT r9 items #1/#4).
 
 - ``hard_negative_mining_ivf`` — the EXACT scale path for contrastive
-  hard-negative mining (``similarity.hard_negatives_ivf``): IVF cell
+  hard-negative mining (``similarity.ivf_topk_exact`` with ``pos_col``): IVF cell
   pruning with the same-label exclusion pushed into both probe phases,
   provably equal to brute force — so the SAME DuckDB all-pairs oracle
   that checks ``hard_negative_mining`` hash-checks this plan.
@@ -50,23 +50,24 @@ _HN_ORACLE = """
 @query("hard_negative_mining_ivf", oracle=_HN_ORACLE)
 def hard_negative_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact hard-negative mining THROUGH the IVF-pruned plan
-    (``similarity.hard_negatives_ivf`` → ``ivf_topk_exact`` with the
-    label exclusion in both probe phases): DuckDB recomputes the answer
-    as brute-force all-pairs — the hash passing means the cell pruning,
+    (``similarity.ivf_topk_exact`` with the label exclusion in both
+    probe phases): DuckDB recomputes the answer as brute-force
+    all-pairs — the hash passing means the cell pruning,
     the triangle-inequality bound, AND the pushed-down label filter
     changed nothing, which is the operator's entire claim. n_probe=2 of
     8 cells forces the phase-2 bound to do real work (most of the
     provisional top-k must survive cells probed only because the bound
     said they might matter)."""
-    from .operators.similarity import hard_negatives_ivf
+    from .operators.similarity import ivf_topk_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return hard_negatives_ivf(
+    return ivf_topk_exact(
         emb.filter((F.col("vec_id") >= 16) & (F.col("vec_id") < 48)),
         emb,
         k=5,
         n_cells=8,
         n_probe=2,
+        pos_col="label",
     )
 
 
@@ -74,7 +75,7 @@ def hard_negative_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hard_negative_mining_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the ANN over-fetch mining path against the brute-force
     answer on the SAME queries — the self-measuring companion the guard
-    in ``hard_negatives`` points at. Both methods (IVF probe, LSH
+    in ``cosine_topk`` points at. Both methods (IVF probe, LSH
     buckets) run with overfetch=4; seeded planes/cells and tie-broken
     rankings make the report deterministic. One row per method:
     (method, k, overfetch, n_queries, recall)."""
@@ -84,7 +85,7 @@ def hard_negative_mining_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 16)
     k, overfetch = 5, 4
 
-    exact = S.hard_negatives(queries, emb, k=k)
+    exact = S.cosine_topk(queries, emb, k=k, pos_col="label")
     truth = exact.select("query_id", F.col("neighbor_id").alias("true_id"))
 
     ivf = S.hard_negatives_ann(
@@ -184,8 +185,8 @@ _HN_BLAS_ORACLE = """
 @query("hard_negative_mining_blas", oracle=_HN_BLAS_ORACLE)
 def hard_negative_mining_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining through the GEMM scale path
-    (``similarity.hard_negatives_blas``): broadcast anchor matrix, one
-    numpy matmul per catalog partition, per-partition top-k, global
+    (``similarity.cosine_topk`` with ``pos_col``): broadcast anchor
+    matrix, one numpy matmul per catalog partition, per-partition top-k, global
     window reduce. DuckDB recomputes the answer pair-by-pair — the hash
     passing pins the GEMM scoring, the null-safe label mask, the
     partial-top-k union, and the final reduce to brute-force semantics.
@@ -193,9 +194,10 @@ def hard_negative_mining_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured at sf10 (200k catalog), 8000 anchors cost 20.1 s vs 18.0 s
     for 1000 (8x the anchors, 1.1x the wall-clock) — against
     ~199 ms/anchor (~26 min for 8000) on the interpreted per-pair fold."""
-    from .operators.similarity import hard_negatives_blas
+    from .operators.similarity import cosine_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return hard_negatives_blas(
-        emb.filter((F.col("vec_id") >= 48) & (F.col("vec_id") < 80)), emb, k=5
+    return cosine_topk(
+        emb.filter((F.col("vec_id") >= 48) & (F.col("vec_id") < 80)), emb, k=5,
+        pos_col="label",
     )

@@ -125,7 +125,7 @@ def hard_negative_mining_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors = emb.filter((F.col("vec_id") >= 96) & (F.col("vec_id") < 128))
     k = 5
 
-    truth = S.hard_negatives(anchors, emb, k=k).select(
+    truth = S.cosine_topk(anchors, emb, k=k, pos_col="label").select(
         "query_id", F.col("neighbor_id").alias("true_id")
     )
     n_q = anchors.count()

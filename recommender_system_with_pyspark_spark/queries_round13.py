@@ -66,10 +66,13 @@ def als_recommend_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of IVF-served ALS recommendations vs exact
     ``recommendForUserSubset`` on the same user sample.
 
-    Plan shape per probe: user factors broadcast (|sample|·n_probe rows),
-    item-factor index scanned ONLY in the probed cells (PartitionFilter),
-    exact dot re-rank inside — per-user work bounded by n_probe/n_cells
-    of the catalog instead of the full GEMM. Rows:
+    Each probe is the call ``models.recommend_topk_ann`` serves with
+    (``hard_negatives_indexed``, no label mask, no self mask), so the
+    recall reported is the recall of the served path: user factors
+    broadcast as the anchor matrix, the item-factor index scanned ONLY in
+    the probed cells (PartitionFilter), one GEMM per batch against the
+    anchors that probed its cell — per-user work bounded by
+    n_probe/n_cells of the catalog instead of the full GEMM. Rows:
     (method, k, n_probe, n_cells, n_users, recall)."""
     from .operators import similarity as S
 
@@ -100,8 +103,8 @@ def als_recommend_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = []
     for n_probe in (2, 4, _ANN_CELLS):
-        ann = S.ivf_probe_batch(
-            spark, path, q, id_col="id", vec_col="features",
+        ann = S.hard_negatives_indexed(
+            spark, path, q, id_col="id", vec_col="features", pos_col=None,
             k=_ANN_K, n_probe=n_probe, exclude_self=False,
         )
         hits = exact.join(

@@ -448,19 +448,19 @@ def bpe_encode_cached_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive hard-negative mining (``similarity.hard_negatives``):
-    per query embedding, the 5 most-similar vectors with a DIFFERENT
-    class label — the near-miss negatives contrastive/triplet training
-    needs (random negatives are too easy after the first epoch). Same
-    broadcast-queries brute-force plan and rounding as ``cosine_topk``,
-    so DuckDB recomputes every similarity, the label exclusion
-    (IS DISTINCT FROM on both sides), and the ranking in closed form.
-    Catalog-scale path: ANN over-fetch + positive filter, same contract."""
-    from .operators.similarity import hard_negatives
+    """Contrastive hard-negative mining (``similarity.cosine_topk`` with
+    ``pos_col="label"``): per query embedding, the 5 most-similar vectors
+    with a DIFFERENT class label — the near-miss negatives
+    contrastive/triplet training needs (random negatives are too easy
+    after the first epoch). Exact brute force with round-to-6 sims, so
+    DuckDB recomputes every similarity, the label exclusion (IS DISTINCT
+    FROM on both sides), and the ranking in closed form. Catalog-scale
+    path: ANN over-fetch + positive filter, same contract."""
+    from .operators.similarity import cosine_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return hard_negatives(
-        emb.filter(F.col("vec_id") < 16), emb, k=5
+    return cosine_topk(
+        emb.filter(F.col("vec_id") < 16), emb, k=5, pos_col="label"
     )
 
 

@@ -375,8 +375,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — exact and fully distributed:
     block-matrix cogroup (each chunk-pair block is one BLAS matmul task; no
     driver collect, no broadcast ceiling, scales as O(n²/C²) work × C²
-    tasks). ``embedding_near_dup_blas`` remains the opt-in fast path when
-    one side fits in a broadcast."""
+    tasks)."""
     emb = load_table(spark, sf_dir, "embeddings")
     # n_chunks=16: 136 block tasks instead of 10 — with 32 cores, 10 fat
     # tasks are straggler-bound (wall-clock = slowest task placement, the

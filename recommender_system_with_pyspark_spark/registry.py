@@ -15,7 +15,6 @@ value hash, so:
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,16 +40,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 def load_all_queries() -> None:
     """Import every query module so registration side effects run.
-
-    After loading, the registry is round-robin re-ordered across modules
-    (``_stratify_driver_window``) so a consumer that samples only the
-    first N entries — the driver's correctness window — sees every query
-    module instead of freezing on the oldest. The ordering is a DISPLAY
-    concern only: the gating correctness check is the FULL oracle sweep
-    (``tools/check_oracle.py`` runs all registered queries; every round's
-    sweep log is committed). Consumers that want raw registration order
-    (module × registration sequence) set ``SPARK_GRAFT_STRATIFY_WINDOW=0``.
-    """
+    ``QUERIES`` keeps registration order; consumers look queries up by name."""
     from . import queries_relational  # noqa: F401
     from . import queries_text  # noqa: F401
     from . import queries_ml  # noqa: F401
@@ -59,7 +49,7 @@ def load_all_queries() -> None:
     from . import queries_composite  # noqa: F401
     from . import queries_tpch_shapes  # noqa: F401
     from . import queries_corpus  # noqa: F401
-    from . import queries_round5  # noqa: F401  (appended in round order: driver window is order-sensitive)
+    from . import queries_round5  # noqa: F401
     from . import queries_round6  # noqa: F401
     from . import queries_round7  # noqa: F401
     from . import queries_round8  # noqa: F401
@@ -68,81 +58,3 @@ def load_all_queries() -> None:
     from . import queries_round11  # noqa: F401
     from . import queries_round12  # noqa: F401
     from . import queries_round13  # noqa: F401
-
-    if os.environ.get("SPARK_GRAFT_STRATIFY_WINDOW", "1") != "0":
-        _stratify_driver_window()
-
-
-def _build_round() -> int:
-    """Best-effort build-round number, used ONLY to vary the driver-window
-    sampling offset (VERDICT r10 #8): one `BENCH_r{N}.json` lands in the
-    repo root per completed round, so the current round is their count + 1.
-    Overridable (`SPARK_GRAFT_WINDOW_ROUND`) and silently 0 outside the
-    repo layout — the rotation then degrades to the round-10 ordering."""
-    env = os.environ.get("SPARK_GRAFT_WINDOW_ROUND")
-    if env is not None:
-        try:
-            return int(env)
-        except ValueError:
-            return 0
-    try:
-        import glob
-
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        return len(glob.glob(os.path.join(repo, "BENCH_r*.json"))) + 1
-    except Exception:
-        return 0
-
-
-def _round_permutation(names: "list[str]", key: str) -> "list[str]":
-    """Deterministic round-keyed permutation of one module's query queue:
-    Fisher-Yates seeded from md5 of (module, round). CPython documents
-    the core generator's sequence as stable across versions, and the
-    permutation depends only on the key and the queue contents — same
-    round, same registry ⇒ same window, different rounds ⇒
-    near-independent samples (VERDICT r12 #8)."""
-    import hashlib
-    import random
-
-    seed = int.from_bytes(hashlib.md5(key.encode()).digest()[:8], "big")
-    out = list(names)
-    random.Random(seed).shuffle(out)
-    return out
-
-
-def _stratify_driver_window() -> None:
-    """Re-order QUERIES so the driver's first-50 correctness window samples
-    EVERY query module (≈ every build round) instead of freezing on the
-    oldest entries: round-robin one query per source module, preserving
-    within-module registration order. Deterministic (module import order ×
-    registration order × build round), idempotent, and a pure re-insertion
-    — names, callables, and oracles are untouched.
-
-    Round rotation (VERDICT r10 #8, permutation since r13 per VERDICT r12
-    #8): with 230+ registered queries the 50-entry window covers ~22%,
-    and a FIXED round-robin start re-samples the same module heads every
-    round; a plain per-round queue OFFSET (r11-r12) still walks each
-    module's list in registration order, so consecutive windows converge
-    toward >50% overlap as the registry stabilizes (13/50 fresh by r12,
-    trending down). Each module's queue is therefore PERMUTED by a
-    round-keyed Fisher-Yates (seed = md5(module, round) — deterministic
-    for a given round, near-independent across rounds) before
-    interleaving: consecutive windows draw ~w²/n overlapping entries per
-    module (~20-25% of the window at the current registry shape), while
-    any single round stays fully deterministic. The gating correctness
-    check remains the FULL sweep (module docstring)."""
-    offset = _build_round()
-    by_mod: dict[str, list[str]] = {}
-    for name, fn in QUERIES.items():
-        by_mod.setdefault(fn.__module__, []).append(name)
-    queues = []
-    for mod, names in by_mod.items():
-        queues.append(_round_permutation(names, f"{mod}:{offset}"))
-    order: list[str] = []
-    while queues:
-        for q in queues:
-            order.append(q.pop(0))
-        queues = [q for q in queues if q]
-    rebuilt = {n: QUERIES[n] for n in order}
-    QUERIES.clear()
-    QUERIES.update(rebuilt)

@@ -51,11 +51,7 @@ def _replay_state_partitions(spark: SparkSession, input_bytes: int) -> int:
     run loses parallelism. UNBOUNDED production streams are a capacity
     decision this heuristic cannot see (state partitions are pinned per
     checkpoint and sized to peak key cardinality, not to one batch's
-    input) — override via SPARK_GRAFT_STREAM_STATE_PARTITIONS or set
-    spark.sql.shuffle.partitions explicitly before .start()."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
+    input) — set spark.sql.shuffle.partitions explicitly before .start()."""
     par = spark.sparkContext.defaultParallelism
     by_size = -(-input_bytes // _STATE_PARTITION_TARGET_BYTES)  # ceil
     return max(1, min(par, max(min(8, par), by_size)))

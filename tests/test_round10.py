@@ -5,6 +5,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.topk_reference import brute_topk
+
 
 def _emb(spark, sf_small):
     from recommender_system_with_pyspark_spark.io import load_table
@@ -15,26 +17,22 @@ def _emb(spark, sf_small):
 def test_hard_negatives_guard_raises(spark, sf_small):
     """An oversized query frame must raise (pointing at the ANN path),
     never broadcast — the repo's no-unbounded-broadcast policy."""
-    from recommender_system_with_pyspark_spark.operators.similarity import hard_negatives
+    from recommender_system_with_pyspark_spark.operators.similarity import cosine_topk
 
     emb = _emb(spark, sf_small)
     with pytest.raises(ValueError, match="hard_negatives_ann"):
-        hard_negatives(emb.limit(8), emb, k=3, max_broadcast_rows=4)
+        cosine_topk(emb.limit(8), emb, k=3, pos_col="label", max_broadcast_rows=4)
 
 
 def test_hard_negatives_ivf_equals_brute_force(spark, sf_small):
     """The IVF-pruned exact path is bit-identical to brute force — cell
     pruning + the label-aware radius bound change nothing."""
-    from recommender_system_with_pyspark_spark.operators.similarity import (
-        hard_negatives,
-        hard_negatives_ivf,
-    )
+    from recommender_system_with_pyspark_spark.operators.similarity import ivf_topk_exact
 
     emb = _emb(spark, sf_small)
     q = emb.filter(F.col("vec_id") < 12)
-    brute = hard_negatives(q, emb, k=4).collect()
-    ivf = hard_negatives_ivf(q, emb, k=4, n_cells=8, n_probe=2).collect()
-    assert sorted(map(tuple, brute)) == sorted(map(tuple, ivf))
+    ivf = ivf_topk_exact(q, emb, k=4, n_cells=8, n_probe=2, pos_col="label").collect()
+    assert sorted(map(tuple, ivf)) == brute_topk(emb, q, 4, pos_col="label")
 
 
 def test_hard_negatives_ann_contract(spark, sf_small):
@@ -169,39 +167,32 @@ def test_mp3_audit_handles_unparseable_blob(spark):
     assert row["n_frames"] == 0 and row["duration_ms"] is None
 
 
-# ---- BLAS hard-negative miner ------------------------------------------------
+# ---- GEMM hard-negative miner (cosine_topk with pos_col) ---------------------
 
 
 def test_hard_negatives_blas_equals_brute_force(spark, sf_small):
-    from recommender_system_with_pyspark_spark.operators.similarity import (
-        hard_negatives,
-        hard_negatives_blas,
-    )
+    from recommender_system_with_pyspark_spark.operators.similarity import cosine_topk
 
     emb = _emb(spark, sf_small)
     q = emb.filter(F.col("vec_id") < 12)
-    brute = sorted(map(tuple, hard_negatives(q, emb, k=4).collect()))
-    blas = sorted(map(tuple, hard_negatives_blas(q, emb, k=4).collect()))
-    assert brute == blas
+    got = sorted(map(tuple, cosine_topk(q, emb, k=4, pos_col="label").collect()))
+    assert got == brute_topk(emb, q, 4, pos_col="label")
 
 
 def test_hard_negatives_blas_guard_and_empty(spark, sf_small):
-    from recommender_system_with_pyspark_spark.operators.similarity import hard_negatives_blas
+    from recommender_system_with_pyspark_spark.operators.similarity import cosine_topk
 
     emb = _emb(spark, sf_small)
     with pytest.raises(ValueError, match="ceiling"):
-        hard_negatives_blas(emb.limit(8), emb, k=3, max_broadcast_rows=4)
+        cosine_topk(emb.limit(8), emb, k=3, pos_col="label", max_broadcast_rows=4)
     with pytest.raises(ValueError, match="empty"):
-        hard_negatives_blas(emb.limit(0), emb, k=3)
+        cosine_topk(emb.limit(0), emb, k=3, pos_col="label")
 
 
 def test_hard_negatives_blas_null_label_semantics(spark):
     """eqNullSafe semantics: two NULL labels are NOT distinct (pair
     excluded); NULL vs non-NULL IS distinct (pair kept)."""
-    from recommender_system_with_pyspark_spark.operators.similarity import (
-        hard_negatives,
-        hard_negatives_blas,
-    )
+    from recommender_system_with_pyspark_spark.operators.similarity import cosine_topk
 
     rows = [
         (1, [1.0, 0.0], None),
@@ -212,12 +203,9 @@ def test_hard_negatives_blas_null_label_semantics(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label string")
     blas = {
         (r["query_id"], r["neighbor_id"])
-        for r in hard_negatives_blas(df, df, k=4).collect()
+        for r in cosine_topk(df, df, k=4, pos_col="label").collect()
     }
-    brute = {
-        (r["query_id"], r["neighbor_id"])
-        for r in hard_negatives(df, df, k=4).collect()
-    }
+    brute = {(t[0], t[1]) for t in brute_topk(df, df, 4, pos_col="label")}
     assert blas == brute
     assert (1, 2) not in blas and (2, 1) not in blas  # null-null excluded
     assert (1, 3) in blas  # null vs 'a' kept

@@ -9,19 +9,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-
-def _tie_corpus(spark):
-    """Tie-heavy corpus spread across partitions: one high-sim trio plus
-    57 candidates with IDENTICAL embeddings (sim ties at every boundary),
-    ids assigned in DESCENDING order vs insertion so per-partition
-    truncation without an id tie-break keeps the wrong survivors."""
-    rows = [(900, [1.0, 0.0], "q")]
-    rows += [(60 + j, [0.99, 0.01], "a") for j in range(3)]  # clear top-3
-    rows += [(57 - i, [0.8, 0.6], "b") for i in range(57)]  # ids 57..1, all tied
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label string"
-    )
-    return df.repartition(8)
+from tests.topk_reference import brute_topk, tie_corpus
 
 
 def test_gemm_tiebreak_equals_brute_on_ties(spark):
@@ -31,15 +19,12 @@ def test_gemm_tiebreak_equals_brute_on_ties(spark):
     the top-k. The perturbed truncation key resolves boundary ties to the
     smallest id inside every batch, making per-batch top-k a superset of
     the global top-k on tie-heavy corpora."""
-    from recommender_system_with_pyspark_spark.operators.similarity import (
-        hard_negatives,
-        hard_negatives_blas,
-    )
+    from recommender_system_with_pyspark_spark.operators.similarity import cosine_topk
 
-    df = _tie_corpus(spark)
+    df = tie_corpus(spark)
     q = df.filter(F.col("vec_id") == 900)
-    brute = sorted(map(tuple, hard_negatives(q, df, k=8).collect()))
-    blas = sorted(map(tuple, hard_negatives_blas(q, df, k=8).collect()))
+    brute = brute_topk(df, q, 8, pos_col="label")
+    blas = sorted(map(tuple, cosine_topk(q, df, k=8, pos_col="label").collect()))
     assert brute == blas
     # the tied block must contribute ids 1..5 (smallest), not arbitrary ones
     tied_ids = [t[1] for t in brute if t[2] < 0.9]
@@ -50,16 +35,15 @@ def test_indexed_tiebreak_equals_brute_on_ties(spark, tmp_path):
     """Same contract through the prebuilt-index probe at n_probe=n_cells
     (the hard_negative_mining_indexed_full exactness claim, tie-heavy)."""
     from recommender_system_with_pyspark_spark.operators.similarity import (
-        hard_negatives,
         hard_negatives_indexed,
         write_ivf_index,
     )
 
-    df = _tie_corpus(spark)
+    df = tie_corpus(spark)
     path = str(tmp_path / "tie_idx")
     write_ivf_index(df, path, n_cells=4, extra_cols=("label",))
     q = df.filter(F.col("vec_id") == 900)
-    brute = sorted(map(tuple, hard_negatives(q, df, k=8).collect()))
+    brute = brute_topk(df, q, 8, pos_col="label")
     idx = sorted(
         map(tuple, hard_negatives_indexed(spark, path, q, k=8, n_probe=4).collect())
     )
@@ -79,14 +63,12 @@ def _rand_emb(spark, n=160, dim=6, seed=3):
     )
 
 
-def test_ivf_probe_batch_guards(spark, tmp_path):
-    """VERDICT r11 #3: the probed query side broadcasts — hard ceiling
-    with the route-to-indexed pointer, same pattern as hard_negatives;
-    plus the pos_col-not-in-index guard ivf_probe_batch lacked (ADVICE:
-    a label-less index failed with a raw AnalysisException deep in the
-    plan)."""
+def test_indexed_probe_guards(spark, tmp_path):
+    """The anchor matrix broadcasts — hard ceiling, same pattern as
+    cosine_topk; plus the pos_col-not-in-index guard (a label-less index
+    must not fail with a raw AnalysisException deep in the plan)."""
     from recommender_system_with_pyspark_spark.operators.similarity import (
-        ivf_probe_batch,
+        hard_negatives_indexed,
         write_ivf_index,
     )
 
@@ -95,11 +77,11 @@ def test_ivf_probe_batch_guards(spark, tmp_path):
     write_ivf_index(emb, path, n_cells=4)  # no extra_cols: label NOT carried
     q = emb.filter(F.col("vec_id") < 10)
     with pytest.raises(ValueError, match="ceiling"):
-        ivf_probe_batch(spark, path, q, k=3, max_broadcast_rows=4)
+        hard_negatives_indexed(spark, path, q, k=3, pos_col=None, max_broadcast_rows=4)
     with pytest.raises(ValueError, match="rebuild with"):
-        ivf_probe_batch(spark, path, q, k=3, pos_col="label")
+        hard_negatives_indexed(spark, path, q, k=3, pos_col="label")
     # un-labelled probe still works against the same index
-    assert ivf_probe_batch(spark, path, q, k=3, n_probe=2).count() == 30
+    assert hard_negatives_indexed(spark, path, q, k=3, n_probe=2, pos_col=None).count() == 30
 
 
 def test_ivf_index_freshness_contract(spark, tmp_path):
@@ -160,7 +142,6 @@ def test_recall_curve_theory_matches_measurement(spark, tmp_path):
     top-k) must equal recall measured by actually probing at each
     n_probe — the prediction the select_n_probe dial stands on."""
     from recommender_system_with_pyspark_spark.operators.similarity import (
-        hard_negatives,
         hard_negatives_indexed,
         ivf_recall_curve,
         select_n_probe,
@@ -175,10 +156,7 @@ def test_recall_curve_theory_matches_measurement(spark, tmp_path):
     recalls = [pt["recall"] for pt in curve]
     assert len(curve) == 4 and recalls[-1] == 1.0
     assert all(a <= b for a, b in zip(recalls, recalls[1:]))
-    truth = {
-        (r.query_id, r.neighbor_id)
-        for r in hard_negatives(anchors, emb, k=4).collect()
-    }
+    truth = {(t[0], t[1]) for t in brute_topk(emb, anchors, 4, pos_col="label")}
     for pt in curve[:2]:
         mined = {
             (r.query_id, r.neighbor_id)

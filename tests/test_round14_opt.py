@@ -131,7 +131,7 @@ def test_semantic_dedup_fused_equals_bruteforce(spark):
 
 # --- replay state-partition derivation ----------------------------------------
 
-def test_replay_state_partitions_floor_growth_cap(spark, monkeypatch):
+def test_replay_state_partitions_floor_growth_cap(spark):
     from recommender_system_with_pyspark_spark.streaming.windows import (
         _STATE_PARTITION_TARGET_BYTES,
         _replay_state_partitions,
@@ -146,8 +146,6 @@ def test_replay_state_partitions_floor_growth_cap(spark, monkeypatch):
         _replay_state_partitions(spark, _STATE_PARTITION_TARGET_BYTES * par * 3)
         == par
     )
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "3")
-    assert _replay_state_partitions(spark, 10**12) == 3
 
 
 def test_run_to_memory_sink_restores_session_conf(spark, sf_tiny):

@@ -199,12 +199,10 @@ def test_tokenizer_fertility_invariants(spark, sf_tiny):
 
 def test_hard_negatives_excludes_positives(spark, sf_tiny):
     from recommender_system_with_pyspark_spark.io import load_table as lt
-    from recommender_system_with_pyspark_spark.operators.similarity import (
-        hard_negatives,
-    )
+    from recommender_system_with_pyspark_spark.operators.similarity import cosine_topk
 
     emb = lt(spark, sf_tiny, "embeddings")
-    out = hard_negatives(emb.filter(F.col("vec_id") < 8), emb, k=4)
+    out = cosine_topk(emb.filter(F.col("vec_id") < 8), emb, k=4, pos_col="label")
     labels = {r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()}
     rows = out.collect()
     assert rows

@@ -4,9 +4,11 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from recommender_system_with_pyspark_spark.operators import similarity as S
+from tests.topk_reference import brute_topk, tie_corpus
 
 
 def _vecs(spark):
@@ -181,13 +183,13 @@ def test_ivf_exact_isolated_query_still_returns_topk(spark):
     assert got == exact and len(got) == 3
 
 
-def test_ivf_probe_batch_prunes_and_full_probe_equals_brute(spark, sf_tiny, tmp_path):
-    """The prebuilt-index batch probe (round 11): (a) the literal cell
-    filter must reach the scan as a PartitionFilter — unprobed cells are
-    pruned FILE READS; (b) probing ALL cells through the physical index
-    (partitioned layout + centroid sidecar + carried label column) must
-    reproduce brute-force hard negatives bit-for-bit; (c) the sidecar
-    round-trips the fitted centroids."""
+def test_indexed_probe_prunes_and_full_probe_equals_brute(spark, sf_tiny, tmp_path):
+    """The prebuilt-index probe: (a) the literal cell filter must reach
+    the scan as a PartitionFilter — unprobed cells are pruned FILE READS;
+    (b) probing ALL cells through the physical index (partitioned layout
+    + centroid sidecar + carried label column) must reproduce
+    brute-force hard negatives bit-for-bit; (c) the sidecar round-trips
+    the fitted centroids."""
     from recommender_system_with_pyspark_spark.io import load_table
     from recommender_system_with_pyspark_spark.plans.explain import formatted_plan
 
@@ -199,24 +201,38 @@ def test_ivf_probe_batch_prunes_and_full_probe_equals_brute(spark, sf_tiny, tmp_
     assert S.read_ivf_centers(spark, path) == centers
 
     anchors = emb.filter("vec_id < 6")
-    probe = S.ivf_probe_batch(spark, path, anchors, k=3, n_probe=2)
+    probe = S.hard_negatives_indexed(spark, path, anchors, k=3, n_probe=2)
     plan = formatted_plan(probe)
     assert "PartitionFilters" in plan
     assert "cell" in plan.split("PartitionFilters", 1)[1][:200]
     got = probe.collect()
     assert got and all(r["rank"] <= 3 for r in got)
 
-    brute = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["sim"])
-        for r in S.hard_negatives(anchors, emb, k=3).collect()
-    }
-    full = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["sim"])
-        for r in S.hard_negatives_indexed(
-            spark, path, anchors, k=3, n_probe=4
-        ).collect()
-    }
-    assert full == brute
+    full = S.hard_negatives_indexed(spark, path, anchors, k=3, n_probe=4)
+    assert sorted(map(tuple, full.collect())) == brute_topk(emb, anchors, 3, pos_col="label")
+
+
+@pytest.mark.parametrize("exclude_self", [True, False])
+@pytest.mark.parametrize("pos_col", [None, "label"])
+def test_cosine_topk_equals_numpy_brute_on_ties(spark, pos_col, exclude_self):
+    """The exact top-k against an independent numpy brute force on a
+    tie-heavy frame, for every mask combination: ties at the k boundary
+    resolve to the smallest neighbor ids inside every batch."""
+    df = tie_corpus(spark)
+    q = df.filter(F.col("vec_id") == 900)
+    got = S.cosine_topk(q, df, k=8, exclude_self=exclude_self, pos_col=pos_col)
+    assert sorted(map(tuple, got.collect())) == brute_topk(
+        df, q, 8, exclude_self=exclude_self, pos_col=pos_col
+    )
+
+
+def test_cosine_topk_keeps_id_types(spark):
+    """Output ids keep the input id type (ALS factor ids are int)."""
+    df = _vecs(spark).withColumn("vec_id", F.col("vec_id").cast("int"))
+    out = S.cosine_topk(df.filter("vec_id = 0"), df, k=2)
+    assert out.schema["query_id"].dataType.simpleString() == "int"
+    assert out.schema["neighbor_id"].dataType.simpleString() == "int"
+    assert [r["neighbor_id"] for r in out.orderBy("rank").collect()] == [1, 4]
 
 
 def test_hard_negatives_indexed_null_label_semantics(spark, tmp_path):
