@@ -150,7 +150,10 @@ def als_workflow(
     """E2 (`als.py`): clean → StringIndexer(Username→UserId) → sparse-entity
     pruning (thresholds `als.py:14-15`) → seeded ALS → top-k with names.
 
-    Returns (recommendations DataFrame, FitResult)."""
+    Returns (recommendations DataFrame, FitResult). Recommendations carry
+    the input's ``UserId`` and ``BGGId`` even when ids exceed int32; the
+    compaction maps then stay cached until the caller passes
+    ``res.id_maps`` to ``release_compaction_maps``."""
     from pyspark.ml.feature import StringIndexer
 
     from ..ml.models import als_prediction, recommend_for_all_users
@@ -179,7 +182,7 @@ def als_workflow(
         # otherwise pin one more copy per call (res.predictions recomputes
         # from lineage if read)
         pruned.unpersist()
-    recs = recommend_for_all_users(res.model, k)
+    recs = recommend_for_all_users(res.model, k, res.id_maps)
     named = recs.join(F.broadcast(games.select("BGGId", "Name")), "BGGId", "left")
     return named.select(
         "UserId", "BGGId", F.round("score", 4).alias("score"), "rank", "Name"

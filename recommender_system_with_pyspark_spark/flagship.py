@@ -37,25 +37,53 @@ def implicit_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def als_safe_ids(ratings: DataFrame):
-    """MLlib ALS requires int32 user/item ids. Real key spaces are longs
-    (a 100 TB catalog's surrogate keys overflow int32 — found by the sf10
-    sweep, SCALING.md round 7). Thin flagship-shaped wrapper over the
-    general ``operators.relational.dense_id_compaction`` (round-8
-    promotion — VERDICT r7 #2): if both id columns already fit int32, the
-    ratings pass through UNCHANGED (keeps every existing output
-    bit-identical and costs one tiny agg); otherwise each id space is
-    densely compacted to a contiguous int index.
+def fit_flagship_als(
+    spark: SparkSession,
+    sf_dir: str,
+    rank: int = 8,
+    max_iter: int = 5,
+    reg_param: float = 0.1,
+    min_item_count: int = 2,
+    min_user_count: int = 2,
+    seed: int = 1,
+):
+    """The flagship fit: implicit ratings → prune → int32-safe ids →
+    seeded ALS. Every flagship query fits through here.
 
-    Returns (ratings_for_als, user_map|None, item_map|None); maps have
-    columns (user_id|_uidx) / (item_id|_iidx) and are cached — both the
-    compaction join and the output map-back read them."""
+    Returns ``(model, id_maps)``. ``id_maps`` holds one
+    ``dense_id_compaction`` map per id column, ``None`` when the ids
+    already fit int32 (SCALING.md round 7); pass it to
+    ``ml.models.recommend_for_all_users`` or ``restore_ids`` to get the
+    original ids back."""
+    from .ml.models import als_estimator
     from .operators.relational import dense_id_compaction
 
-    out, maps = dense_id_compaction(
-        ratings, ["user_id", "item_id"], idx_cols=["_uidx", "_iidx"]
-    )
-    return out, maps["user_id"], maps["item_id"]
+    # cache the derived ratings: prune_sparse_entities consumes its input
+    # three times (item counts, user counts, final semi-join) and ALS block
+    # construction reads it again — without the cache the join+agg lineage
+    # re-executes on every pass
+    ratings = implicit_ratings(spark, sf_dir).cache()
+    # cache the pruned frame too (round 13): its lineage (three semi-join
+    # passes over ratings) is re-evaluated by the int32-ceiling aggregate
+    # AND by ALS block construction's multiple input reads — measured at
+    # sf0.1, materializing it once cuts the fit wall-clock from ~3.4 s to
+    # ~1.9 s and the whole query ~5.9 -> ~4.6 s. Same lifecycle policy as
+    # the ratings cache above (session-scoped, one entry per plan).
+    pruned = prune_sparse_entities(
+        ratings, "item_id", "user_id", min_item_count, min_user_count
+    ).cache()
+    als_in, id_maps = dense_id_compaction(pruned, ["user_id", "item_id"])
+    model = als_estimator(
+        spark,
+        rank=rank,
+        maxIter=max_iter,
+        regParam=reg_param,
+        userCol="user_id",
+        itemCol="item_id",
+        ratingCol="rating",
+        seed=seed,
+    ).fit(als_in)
+    return model, id_maps
 
 
 def recommend_top_items(
@@ -72,58 +100,17 @@ def recommend_top_items(
     """ratings → prune → ALS → recommendForAllUsers(k) → explode → names.
 
     Returns (user_id, item_id, score, rank, p_name)."""
-    from .ml.models import als_estimator
+    from .ml.models import recommend_for_all_users
 
-    # cache the derived ratings: prune_sparse_entities consumes its input
-    # three times (item counts, user counts, final semi-join) and ALS block
-    # construction reads it again — without the cache the join+agg lineage
-    # re-executes on every pass
-    ratings = implicit_ratings(spark, sf_dir).cache()
-    # cache the pruned frame too (round 13): its lineage (three semi-join
-    # passes over ratings) is re-evaluated by the int32-ceiling aggregate
-    # AND by ALS block construction's multiple input reads — measured at
-    # sf0.1, materializing it once cuts the fit wall-clock from ~3.4 s to
-    # ~1.9 s and the whole query ~5.9 -> ~4.6 s. Same lifecycle policy as
-    # the ratings cache above (session-scoped, one entry per plan).
-    pruned = prune_sparse_entities(
-        ratings, "item_id", "user_id", min_item_count, min_user_count
-    ).cache()
-    # int32 id ceiling: compact long id spaces to dense int indexes when
-    # needed (no-op passthrough otherwise) — SCALING.md round 7
-    als_in, umap, imap = als_safe_ids(pruned)
-    als = als_estimator(
-        spark,
-        rank=rank,
-        maxIter=max_iter,
-        regParam=reg_param,
-        userCol="user_id",
-        itemCol="item_id",
-        ratingCol="rating",
-        seed=seed,
+    model, id_maps = fit_flagship_als(
+        spark, sf_dir, rank, max_iter, reg_param, min_item_count, min_user_count, seed
     )
-    model = als.fit(als_in)
-    recs = model.recommendForAllUsers(k)
-    exploded = recs.select(
-        "user_id", F.posexplode("recommendations").alias("pos", "rec")
-    ).select(
-        "user_id",
-        F.col("rec.item_id").alias("item_id"),
-        F.round(F.col("rec.rating"), 4).alias("score"),
-        (F.col("pos") + 1).alias("rank"),
-    )
-    if umap is not None:
-        exploded = (
-            exploded.withColumnRenamed("user_id", "_uidx")
-            .withColumnRenamed("item_id", "_iidx")
-            .join(umap, "_uidx")
-            .join(F.broadcast(imap), "_iidx")
-            .select("user_id", "item_id", "score", "rank")
-        )
+    recs = recommend_for_all_users(model, k, id_maps)
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("item_id"), "p_name"
     )
-    return exploded.join(F.broadcast(part), "item_id", "left").select(
-        "user_id", "item_id", "score", "rank", "p_name"
+    return recs.join(F.broadcast(part), "item_id", "left").select(
+        "user_id", "item_id", F.round("score", 4).alias("score"), "rank", "p_name"
     )
 
 
@@ -152,26 +139,15 @@ def item_factor_neighbors(
     over the same vectors.
 
     Returns (item_id, neighbor_id, sim, rank, p_name of neighbor)."""
-    from .ml.models import als_estimator
+    from .operators.relational import restore_ids
     from .operators.similarity import cosine_topk
 
-    ratings = implicit_ratings(spark, sf_dir).cache()
-    pruned = prune_sparse_entities(ratings, "item_id", "user_id", 2, 2)
-    # int32 id ceiling: compact long id spaces when needed (SCALING.md r7)
-    als_in, _umap, imap = als_safe_ids(pruned)
-    als = als_estimator(
-        spark, rank=rank, maxIter=max_iter, regParam=reg_param,
-        userCol="user_id", itemCol="item_id", ratingCol="rating", seed=seed,
+    model, id_maps = fit_flagship_als(
+        spark, sf_dir, rank=rank, max_iter=max_iter, reg_param=reg_param, seed=seed
     )
-    factors = als.fit(als_in).itemFactors.select(
-        F.col("id").alias("vec_id"), F.col("features").alias("embedding")
-    )
-    if imap is not None:  # factors carry compacted ids — translate back
-        factors = (
-            factors.withColumnRenamed("vec_id", "_iidx")
-            .join(F.broadcast(imap), "_iidx")
-            .select(F.col("item_id").alias("vec_id"), "embedding")
-        )
+    factors = restore_ids(
+        model.itemFactors.withColumnRenamed("id", "item_id"), "item_id", id_maps["item_id"]
+    ).select(F.col("item_id").alias("vec_id"), F.col("features").alias("embedding"))
     queries = factors.orderBy("vec_id").limit(n_query_items)
     out = cosine_topk(queries, factors, "vec_id", "embedding", k=k, exclude_self=True)
     part = load_table(spark, sf_dir, "part").select(

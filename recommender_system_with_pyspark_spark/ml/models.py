@@ -23,10 +23,19 @@ from pyspark.sql import DataFrame
 
 @dataclass
 class FitResult:
+    """A fitted model with its held-out metrics.
+
+    ``id_maps`` holds the ``dense_id_compaction`` maps of an ALS fit, one
+    per id column (``None`` where the ids already fit int32); pass them to
+    :func:`recommend_for_all_users` to get the caller's ids back.
+    Compacted maps stay cached until the caller passes them to
+    ``operators.relational.release_compaction_maps``."""
+
     model: Model
     metrics: dict[str, float]
     best_params: dict[str, object] = field(default_factory=dict)
     predictions: DataFrame | None = None
+    id_maps: dict = field(default_factory=dict)
 
 
 def _tvs(estimator: Estimator, evaluator, grid, seed: int, parallelism: int = 4):
@@ -150,6 +159,7 @@ def als_prediction(
         metrics={"rmse": rmse_eval.evaluate(pred), "r2": r2_eval.evaluate(pred)},
         best_params={"rank": best.rank, "regParam": best._java_obj.parent().getRegParam() if tune else reg_params[0]},
         predictions=pred,
+        id_maps=_idmaps,
     )
 
 
@@ -313,21 +323,29 @@ def random_forest(df: DataFrame, features_col: str = "features", label_col: str 
     return _classification_fit(rf, df, grid, label_col, seed, compat_hard_roc)
 
 
-def recommend_for_all_users(model, k: int = 10) -> DataFrame:
-    """M11 — per-user top-k (`als.py:44`), exploded to rows with rank."""
+def recommend_for_all_users(model, k: int = 10, id_maps: dict | None = None) -> DataFrame:
+    """M11 — per-user top-k (`als.py:44`), exploded to rows with rank.
+
+    ``id_maps`` (``FitResult.id_maps``) translates the compacted user and
+    item indexes back to the caller's ids; without it, or in the
+    passthrough case, the model's ids are returned as they are."""
     from pyspark.sql import functions as F
 
-    recs = model.recommendForAllUsers(k)
-    item_field = model.getItemCol()
-    return recs.select(
-        model.getUserCol(),
-        F.posexplode("recommendations").alias("pos", "rec"),
+    from ..operators.relational import restore_ids
+
+    user_col, item_col = model.getUserCol(), model.getItemCol()
+    maps = id_maps or {}
+    recs = model.recommendForAllUsers(k).select(
+        user_col, F.posexplode("recommendations").alias("pos", "rec")
     ).select(
-        model.getUserCol(),
-        F.col(f"rec.{item_field}").alias(item_field),
+        user_col,
+        F.col(f"rec.{item_col}").alias(item_col),
         F.col("rec.rating").alias("score"),
         (F.col("pos") + 1).alias("rank"),
     )
+    for c in (user_col, item_col):
+        recs = restore_ids(recs, c, maps.get(c))
+    return recs
 
 
 def build_als_ann_index(

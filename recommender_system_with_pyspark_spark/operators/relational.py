@@ -402,15 +402,16 @@ def restore_ids(
 ) -> DataFrame:
     """Translate a consumer-output column of dense indexes back to the
     original ids via the mapping frame ``dense_id_compaction`` returned
-    (no-op when the mapping is None — the passthrough case). The join is
-    un-hinted: AQE broadcasts small maps; a 100 TB user map shuffles."""
+    (no-op when the mapping is None — the passthrough case). Keeps ``df``'s
+    column order. The join is un-hinted: AQE broadcasts small maps; a
+    100 TB user map shuffles."""
     if mapping is None:
         return df
     ic = idx_col or [c for c in mapping.columns if c != col][0]
     return (
         df.withColumnRenamed(col, ic)
         .join(mapping, ic)
-        .drop(ic)
+        .select(*df.columns)
     )
 
 

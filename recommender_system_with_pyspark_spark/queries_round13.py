@@ -2,8 +2,9 @@
 
 The round-12 sf100 probe priced EXACT ``recommendForAllUsers`` at
 ≈145.6 h, 99.6% of it the users×items factor GEMM — the cost driver is
-the 20M-item catalog each user scores in full (`ml/models.py:293`,
-reference headline `als.py:44`). The scale path the engine already owns
+the 20M-item catalog each user scores in full
+(``ml.models.recommend_for_all_users``, reference headline `als.py:44`).
+The scale path the engine already owns
 is the partitioned IVF index; what was missing is the bridge from ALS's
 maximum-inner-product scoring (score = u·i) to the index's cosine
 geometry. That bridge is the MIPS→cosine reduction from the public
@@ -43,24 +44,6 @@ def _als_index_path(sf_dir: str) -> str:
     return f"/tmp/spark_graft_ivf_als/{key}_c{_ANN_CELLS}"
 
 
-def _fit_flagship_als(spark: SparkSession, sf_dir: str):
-    """The flagship fit (same data path and hyper-parameters as
-    ``als_recommend`` — `flagship.py:recommend_top_items`), returning the
-    MODEL so factors can be indexed instead of exhaustively scored."""
-    from .flagship import als_safe_ids, implicit_ratings
-    from .ml.models import als_estimator
-    from .operators.relational import prune_sparse_entities
-
-    ratings = implicit_ratings(spark, sf_dir).cache()
-    pruned = prune_sparse_entities(ratings, "item_id", "user_id", 2, 2)
-    als_in, umap, imap = als_safe_ids(pruned)
-    model = als_estimator(
-        spark, rank=8, maxIter=5, regParam=0.1, seed=1,
-        userCol="user_id", itemCol="item_id", ratingCol="rating",
-    ).fit(als_in)
-    return model
-
-
 @query("als_recommend_ann")  # factor recall vs exact MLlib output → rows-only
 def als_recommend_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of IVF-served ALS recommendations vs exact
@@ -74,9 +57,12 @@ def als_recommend_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors that probed its cell — per-user work bounded by
     n_probe/n_cells of the catalog instead of the full GEMM. Rows:
     (method, k, n_probe, n_cells, n_users, recall)."""
+    from .flagship import fit_flagship_als
     from .operators import similarity as S
 
-    model = _fit_flagship_als(spark, sf_dir)
+    # the flagship fit (`als_recommend`'s data path and hyper-parameters);
+    # recall compares model ids on both sides, so the id maps go unused
+    model, _id_maps = fit_flagship_als(spark, sf_dir)
     items = model.itemFactors  # (id, features array<float>)
     m_norm = S.mips_max_norm(items, "features")
     items_aug = S.mips_augment_items(items, m_norm, "features")

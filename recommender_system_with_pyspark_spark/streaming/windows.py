@@ -23,54 +23,6 @@ from pyspark.sql import functions as F
 
 from ..schemas import EVENTS
 
-# Conf channel from the bounded-replay SOURCE (stream_events, which knows
-# the input size) to the bounded-replay SINK (run_to_memory_sink, which
-# starts the query and therefore pins the state-store partition count).
-_REPLAY_STATE_PARTITIONS_CONF = "spark.graft.stream.replayStatePartitions"
-# Input bytes one state partition should carry before another is added.
-# Well under this, a partition's per-micro-batch FIXED cost (state-store
-# provider init + one delta-file commit, measured ~15 ms each at sf0.1)
-# dominates any parallelism it buys.
-_STATE_PARTITION_TARGET_BYTES = 32 << 20
-
-
-def _replay_state_partitions(spark: SparkSession, input_bytes: int) -> int:
-    """Scale-adaptive state-store partition count for BOUNDED availableNow
-    replays: grow with input size (one partition per ~32 MB of source),
-    floored at min(8, defaultParallelism) so batch compute still overlaps
-    the per-partition commit I/O, capped at the session parallelism.
-
-    Measured round 14 (sf0.1, fresh 32-core session, 100 k events): the
-    stateful entries cost 1.34-1.41 s with 32 state partitions but
-    0.80-1.03 s with 8 — the suite inherited `spark.sql.shuffle.partitions
-    = cores`, a BATCH sizing rule, as the state partition count, and 32
-    near-empty state stores paid init+commit for nothing; 1 partition is
-    worse again (serial batch compute, 3.7 s on the Python-state entry).
-    At deployment scale the formula returns the parallelism cap as soon
-    as the replay carries real volume (≥ 32 MB × cores), so no cluster
-    run loses parallelism. UNBOUNDED production streams are a capacity
-    decision this heuristic cannot see (state partitions are pinned per
-    checkpoint and sized to peak key cardinality, not to one batch's
-    input) — set spark.sql.shuffle.partitions explicitly before .start()."""
-    par = spark.sparkContext.defaultParallelism
-    by_size = -(-input_bytes // _STATE_PARTITION_TARGET_BYTES)  # ceil
-    return max(1, min(par, max(min(8, par), by_size)))
-
-
-def _source_bytes(path: str) -> int:
-    """Total bytes of a parquet file/directory source (best-effort)."""
-    try:
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _dirs, files in os.walk(path)
-                for f in files
-            )
-        return os.path.getsize(path)
-    except OSError:
-        return 0
-
-
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet directory (one-file directory =
     one micro-batch; real deployments point this at Kafka).
@@ -97,13 +49,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir.rstrip("/"))
         )
-    # publish the input-derived state partition count for the bounded
-    # replay sink (run_to_memory_sink) — the source is the one place the
-    # replay's size is known before the query starts
-    spark.conf.set(
-        _REPLAY_STATE_PARTITIONS_CONF,
-        str(_replay_state_partitions(spark, _source_bytes(path))),
-    )
     ts_type = schema["ts"].dataType.typeName()
     if ts_type == "long":  # nanos-as-long
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -249,22 +194,26 @@ def run_to_memory_sink(stream_df: DataFrame, output_mode: str = "complete") -> D
     parquet/Kafka sinks with checkpointing).
 
     State-store sizing (round 14): a streaming query pins its state
-    partition count from ``spark.sql.shuffle.partitions`` at first start —
-    the session default (= core count, a BATCH sizing rule) gave every toy
-    replay 32 near-empty state stores paying init+commit per micro-batch.
-    When the source published an input-derived count (``stream_events``),
-    it is applied around .start() and the session value restored after
-    (.start() is synchronous, so the scope is exact; concurrent .start()
-    calls from OTHER driver threads would race on the session conf — the
-    engine's harnesses run streaming queries serially). Partition count
-    never changes RESULTS: aggregations/dedup/join state are hash-keyed
-    and the emitted rows are set-equal under any partitioning."""
+    partition count from ``spark.sql.shuffle.partitions`` at first start.
+    The session default (= core count, a BATCH sizing rule) gave every toy
+    replay 32 near-empty state stores paying init+commit per micro-batch
+    (sf0.1, 32 cores: the stateful entries cost 1.34-1.41 s with 32 state
+    partitions, 0.80-1.03 s with 8; 1 partition is worse again, serial
+    batch compute). So the count is pinned to min(8, defaultParallelism)
+    around .start() and the session value restored after (.start() is
+    synchronous, so the scope is exact; concurrent .start() calls from
+    OTHER driver threads would race on the session conf — the engine's
+    harnesses run streaming queries serially). UNBOUNDED production
+    streams size state to peak key cardinality: start them through their
+    own sink. Partition count never changes RESULTS: aggregations/dedup/
+    join state are hash-keyed and the emitted rows are set-equal under
+    any partitioning."""
     spark = stream_df.sparkSession
     name = f"sink_{uuid.uuid4().hex[:8]}"
-    derived = spark.conf.get(_REPLAY_STATE_PARTITIONS_CONF, None)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if derived:
-        spark.conf.set("spark.sql.shuffle.partitions", derived)
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(min(8, spark.sparkContext.defaultParallelism))
+    )
     try:
         q = (
             stream_df.writeStream.outputMode(output_mode)
@@ -275,6 +224,5 @@ def run_to_memory_sink(stream_df: DataFrame, output_mode: str = "complete") -> D
         )
         q.awaitTermination()
     finally:
-        if derived:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(name)

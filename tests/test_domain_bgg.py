@@ -113,6 +113,30 @@ def test_als_workflow_releases_pruned_cache(tables, monkeypatch):
     assert recs.count() == res.model.userFactors.count() * 5
 
 
+def test_als_workflow_long_bggids_come_back_named(tables):
+    """BGGIds past int32 are compacted for the fit; every recommendation
+    carries an input BGGId and so joins to its name."""
+    from recommender_system_with_pyspark_spark.operators.relational import (
+        release_compaction_maps,
+    )
+
+    shift = F.col("BGGId").cast("long") + F.lit(5_000_000_000)
+    ratings = tables["user_ratings"].withColumn("BGGId", shift)
+    games = tables["games"].withColumn("BGGId", shift)
+    k = 5
+    recs, res = bgg.als_workflow(
+        ratings, games, min_game_ratings=20, min_user_ratings=5,
+        k=k, tune=False, ranks=(4,), reg_params=(0.1,), max_iter=5,
+    )
+    got = recs.collect()
+    input_ids = {r["BGGId"] for r in ratings.select("BGGId").distinct().collect()}
+    assert len(got) == res.model.userFactors.count() * k
+    assert all(r["Name"] is not None for r in got)
+    assert {r["BGGId"] for r in got} <= input_ids
+    assert res.id_maps["BGGId"] is not None
+    release_compaction_maps(res.id_maps)
+
+
 def test_content_model_end_to_end(tables):
     """E3: features → PCA → logistic regression on the buckets label."""
     from recommender_system_with_pyspark_spark.ml.models import logistic_regression

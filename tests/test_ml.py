@@ -150,6 +150,31 @@ def test_als_prediction_and_topk(spark, sf_tiny):
     assert w_bad.count() == 0
 
 
+def test_als_prediction_long_ids_recommend_input_ids(spark):
+    """Ids past int32 are compacted for the fit; the recommendations come
+    back in the caller's ids, never in the dense indexes."""
+    from recommender_system_with_pyspark_spark.operators.relational import (
+        release_compaction_maps,
+    )
+
+    big = 5_000_000_000
+    users = {big + u for u in range(30)}
+    items = {big * 2 + i for i in range(12)}
+    rows = [
+        (big + u, big * 2 + i, float((u * 7 + i * 3) % 5 + 1))
+        for u in range(30) for i in range(12) if (u + i) % 3
+    ]
+    ratings = spark.createDataFrame(rows, "user_id long, item_id long, rating double")
+    res = MD.als_prediction(ratings, ranks=(4,), reg_params=(0.1,), max_iter=3, tune=False)
+    assert all(m is not None for m in res.id_maps.values())
+    k = 3
+    got = MD.recommend_for_all_users(res.model, k, res.id_maps).collect()
+    release_compaction_maps(res.id_maps)
+    assert len(got) == res.model.userFactors.count() * k
+    assert {r["user_id"] for r in got} <= users
+    assert {r["item_id"] for r in got} <= items
+
+
 def test_als_blocks_sized_to_cores(spark, sf_tiny):
     """Every ALS is built by ``als_estimator``: one user/item block per
     session core, whether fitted alone or as the TVS refit."""

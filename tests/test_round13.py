@@ -338,11 +338,9 @@ def test_recommend_topk_ann_full_probe_matches_exact(spark, sf_tiny, tmp_path):
         build_als_ann_index,
         recommend_topk_ann,
     )
-    from recommender_system_with_pyspark_spark.queries_round13 import (
-        _fit_flagship_als,
-    )
+    from recommender_system_with_pyspark_spark.flagship import fit_flagship_als
 
-    model = _fit_flagship_als(spark, sf_tiny)
+    model, _id_maps = fit_flagship_als(spark, sf_tiny)
     path = str(tmp_path / "als_idx")
     centers = build_als_ann_index(model, path, n_cells=4, seed=1)
     users = model.userFactors.orderBy("id").limit(16)

@@ -3,7 +3,7 @@
 Every optimization this round is an action-count / driver-time change
 that must be value-invisible: external cut points for the two-stage
 rank/cumsum, the parsed kmeans centers literal, the fused semantic-dedup
-radii pass, the replay state-partition derivation, and the mp3 filler
+radii pass, the bounded-replay state-partition pin, and the mp3 filler
 boundary guard.
 """
 
@@ -129,23 +129,20 @@ def test_semantic_dedup_fused_equals_bruteforce(spark):
         assert abs(s1 - s2) < 2e-6
 
 
-# --- replay state-partition derivation ----------------------------------------
+# --- bounded-replay state partitions ------------------------------------------
 
-def test_replay_state_partitions_floor_growth_cap(spark):
-    from recommender_system_with_pyspark_spark.streaming.windows import (
-        _STATE_PARTITION_TARGET_BYTES,
-        _replay_state_partitions,
+def test_stream_tumbling_counts_leaves_session_conf_unchanged(spark, sf_tiny):
+    """The sink pins the state-partition count around .start() only: no
+    graft conf key is left behind and the shuffle partitions come back."""
+    from recommender_system_with_pyspark_spark.queries_streaming import (
+        stream_tumbling_counts,
     )
 
-    par = spark.sparkContext.defaultParallelism
-    floor = min(8, par)
-    assert _replay_state_partitions(spark, 0) == floor
-    assert _replay_state_partitions(spark, 1) == floor
-    # grows with input once past floor x target bytes, capped at parallelism
-    assert (
-        _replay_state_partitions(spark, _STATE_PARTITION_TARGET_BYTES * par * 3)
-        == par
-    )
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert stream_tumbling_counts(spark, sf_tiny).count() > 0
+    keys = [r["key"] for r in spark.sql("SET").collect()]
+    assert [k for k in keys if k.startswith("spark.graft.stream.")] == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_run_to_memory_sink_restores_session_conf(spark, sf_tiny):

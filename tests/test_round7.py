@@ -243,24 +243,17 @@ def test_simhash_families_agree_on_equivalence_corpus(spark, sf_tiny):
 # -------------------------------------------------- ALS int32 id ceiling
 
 
-def test_als_safe_ids_passthrough_within_int32(spark):
-    """ids inside int32 must pass through UNCHANGED (same object, no maps)
-    so existing golden outputs stay bit-identical."""
-    from recommender_system_with_pyspark_spark.flagship import als_safe_ids
-
-    r = spark.createDataFrame(
-        [(1, 10, 1.0), (2, 20, 2.0)], "user_id long, item_id long, rating double"
-    )
-    out, umap, imap = als_safe_ids(r)
-    assert out is r and umap is None and imap is None
-
-
-def test_als_safe_ids_compacts_long_ids_and_maps_back(spark):
+def test_dense_id_compaction_als_recommends_original_ids(spark):
     """sf10 finding (SCALING.md r7): key spaces beyond int32 must be
     densely compacted for MLlib ALS and translated back afterward."""
-    from pyspark.ml.recommendation import ALS
-
-    from recommender_system_with_pyspark_spark.flagship import als_safe_ids
+    from recommender_system_with_pyspark_spark.ml.models import (
+        als_estimator,
+        recommend_for_all_users,
+    )
+    from recommender_system_with_pyspark_spark.operators.relational import (
+        dense_id_compaction,
+        release_compaction_maps,
+    )
 
     big = 5_000_000_000  # > 2^31
     rows = [
@@ -268,25 +261,23 @@ def test_als_safe_ids_compacts_long_ids_and_maps_back(spark):
         for u in range(8) for i in range(6)
     ]
     r = spark.createDataFrame(rows, "user_id long, item_id long, rating double")
-    out, umap, imap = als_safe_ids(r)
-    assert umap is not None and imap is not None
+    out, maps = dense_id_compaction(r, ["user_id", "item_id"])
+    assert maps["user_id"] is not None and maps["item_id"] is not None
     stats = out.agg(
         F.min("user_id"), F.max("user_id"), F.min("item_id"), F.max("item_id")
     ).first()
     assert 1 <= stats[0] and stats[1] <= 8 and 1 <= stats[2] and stats[3] <= 6
     assert out.count() == len(rows)  # compaction is a 1:1 re-keying
     # end-to-end: fit + recommend + map back to the original long ids
-    model = ALS(rank=2, maxIter=2, userCol="user_id", itemCol="item_id",
-                ratingCol="rating", coldStartStrategy="drop", seed=1).fit(out)
-    recs = model.recommendForAllUsers(2).select(
-        F.col("user_id").alias("_uidx"),
-        F.explode("recommendations.item_id").alias("_iidx"),
-    )
-    back = recs.join(umap, "_uidx").join(imap, "_iidx")
-    got_users = {row["user_id"] for row in back.select("user_id").distinct().collect()}
-    assert got_users == {big + u for u in range(8)}
-    got_items = {row["item_id"] for row in back.select("item_id").distinct().collect()}
-    assert got_items <= {big * 2 + i for i in range(6)}
+    model = als_estimator(
+        spark, rank=2, maxIter=2, userCol="user_id", itemCol="item_id",
+        ratingCol="rating", seed=1,
+    ).fit(out)
+    back = recommend_for_all_users(model, 2, maps).collect()
+    release_compaction_maps(maps)
+    assert len(back) == 8 * 2
+    assert {row["user_id"] for row in back} == {big + u for u in range(8)}
+    assert {row["item_id"] for row in back} <= {big * 2 + i for i in range(6)}
 
 
 # ---------------------------------------------------------- ADVICE r6 fixes

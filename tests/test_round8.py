@@ -53,6 +53,7 @@ def test_dense_id_compaction_compacts_and_restores(spark):
     restored = restore_ids(
         restore_ids(out, "user_id", maps["user_id"]), "item_id", maps["item_id"]
     )
+    assert restored.columns == df.columns
     assert sorted(
         (r["user_id"], r["item_id"], r["rating"]) for r in restored.collect()
     ) == sorted(rows)

@@ -1,38 +1,35 @@
-"""VERDICT r13 #8: controlled ALS recommendForAllUsers blockSize experiment.
+"""Does ``recommendForAllUsers``' blockSize change the emitted top-k?
 
 blockSize batches the user x item factor GEMM inside recommendForAllUsers
 (default 4096). Question: does changing it alter the emitted top-k (tie
 order inside the per-user bounded priority queue), and does it buy time?
-Method: ONE fitted model (fixed seed), recommendForAllUsers(k) at several
-block sizes, exact row-set comparison (scores compared RAW, not rounded)
-plus wall-clock per setting. Read-only: no engine change.
+Method: ONE flagship model (``flagship.fit_flagship_als``, seed 1, the
+package's block layout), ``ml.models.recommend_for_all_users(k)`` at
+several block sizes, exact row-set comparison (scores compared RAW, not
+rounded) plus wall-clock per setting. Read-only: no engine change. The
+same row-set comparison checks that a change to the fit keeps the exact
+recommendations.
+
+Usage: SPARK_GRAFT_SF_DIR=/path/to/sf0.1 python tools/als_blocksize_r14.py
 """
 import os, sys, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 from recommender_system_with_pyspark_spark.session import get_spark
-from recommender_system_with_pyspark_spark.flagship import implicit_ratings, als_safe_ids
-from recommender_system_with_pyspark_spark.operators.relational import prune_sparse_entities
-from pyspark.ml.recommendation import ALS
-from pyspark.sql import functions as F
+from recommender_system_with_pyspark_spark.flagship import fit_flagship_als
+from recommender_system_with_pyspark_spark.ml.models import recommend_for_all_users
 
-spark = get_spark(app_name="als_blocksize_r14", master="local[32]", shuffle_partitions=32)
-ratings = implicit_ratings(spark, SF).cache()
-pruned = prune_sparse_entities(ratings, "item_id", "user_id", 2, 2).cache()
-als_in, _u, _i = als_safe_ids(pruned)
-model = ALS(rank=8, maxIter=5, regParam=0.1, userCol="user_id", itemCol="item_id",
-            ratingCol="rating", coldStartStrategy="drop", seed=1).fit(als_in)
+spark = get_spark(app_name="als_blocksize")
+model, id_maps = fit_flagship_als(spark, SF)
 
 def recs_rows(bs, k=5):
     model.setBlockSize(bs)
-    df = model.recommendForAllUsers(k).select(
-        "user_id", F.posexplode("recommendations").alias("pos", "rec")
-    ).select("user_id", "pos", F.col("rec.item_id").alias("item"), F.col("rec.rating").alias("score"))
+    df = recommend_for_all_users(model, k, id_maps)
     t0 = time.time()
     df.write.mode("overwrite").format("noop").save()
     t = time.time() - t0
-    rows = {(r["user_id"], r["pos"], r["item"], r["score"]) for r in df.collect()}
+    rows = {(r["user_id"], r["rank"], r["item_id"], r["score"]) for r in df.collect()}
     return rows, t
 
 base, tbase = recs_rows(4096)
