@@ -27,6 +27,10 @@ joins, corpus rewrites, n-gram explosions). Dimension-scale frames
 (per-round label maps, centroid tables) can keep plain
 ``localCheckpoint`` — promotion of a few million narrow rows is exactly
 what the default level is for.
+
+A data-scale frame stays serialized even when it is small: promoting
+small frames to the deserialized level measured no faster and held two
+cached copies (bigram_logprob, sf0.1, 4 cores).
 """
 
 from __future__ import annotations
@@ -44,68 +48,6 @@ def local_ckpt_ser(df: DataFrame, eager: bool = True) -> DataFrame:
     ``localCheckpoint()`` defaults to when no level is passed; PySpark
     exposes that variant as ``MEMORY_AND_DISK_DESER``)."""
     return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
-
-
-def local_ckpt_auto(
-    df: DataFrame, eager: bool = True, deser_max_bytes: int = 256 << 20
-) -> DataFrame:
-    """SIZE-TIERED local checkpoint — the measured answer to a policy that
-    is otherwise all-or-nothing per site (round-10 finding: the serialized
-    level is mandatory for fact-scale frames but taxes small ones — the
-    bigram-LM per-doc counts paid +52% at sf0.1 deserializing KBs of
-    blocks on every reuse).
-
-    Materialize SERIALIZED first (the memory-safe direction: the frame is
-    never resident as a deserialized object graph before its size is
-    known), then read the ACTUAL cached footprint off the block manager
-    (``getRDDStorageInfo`` — exact bytes, not a Catalyst estimate, which
-    post-join can be off by orders of magnitude in either direction). If
-    the materialized frame is provably small (≤ ``deser_max_bytes``
-    serialized, mem+disk), re-checkpoint it at the default DESERIALIZED
-    level so reuses pay zero per-read deserialization — the promotion
-    itself reads the small serialized blocks exactly once. Large frames
-    stay serialized; an unidentifiable footprint (no new cached RDD info —
-    never observed, but the safe direction is cheap) stays serialized too.
-
-    A LAZY request cannot be sized (nothing is materialized to measure),
-    so it degrades to ``local_ckpt_ser(eager=False)`` — again the safe
-    direction.
-
-    Cost accounting: one extra block-manager RPC per call, plus — only on
-    the small-frame branch — one re-materialization of ≤ ``deser_max_bytes``
-    serialized bytes whose deserialized copy is bounded by the same
-    threshold times the object-overhead factor (measured ~7× on narrow
-    rows: 11 KB ser vs 84 KB deser for the same 1k rows). The serialized
-    blocks stay referenced by the promoted frame's lineage until the
-    caller drops it — bounded by the threshold, reclaimed by the
-    ContextCleaner with the result."""
-    if not eager:
-        return local_ckpt_ser(df, eager=False)
-    jsc = df.sparkSession.sparkContext._jsc.sc()
-    before = {info.id() for info in jsc.getRDDStorageInfo()}
-    ckpt = local_ckpt_ser(df, eager=True)
-    # Size THIS frame's blocks, not "whatever got cached since the
-    # snapshot": under concurrency (parallel queries in one context — the
-    # bench harness, a multi-tenant driver) a before/after diff attributes
-    # other threads' freshly-cached RDDs to this frame, inflating the
-    # measured size and silently blocking promotion (ADVICE r11). The
-    # checkpointed Dataset's analyzed plan IS the LogicalRDD holding the
-    # persisted internal RDD — read its id and filter to exactly it; if
-    # the reflective walk ever breaks across Spark versions, fall back to
-    # the diff (safe direction: over-measure keeps frames serialized).
-    try:
-        rid = ckpt._jdf.queryExecution().analyzed().rdd().id()
-    except Exception:
-        rid = None
-    infos = jsc.getRDDStorageInfo()
-    if rid is not None:
-        new = [info for info in infos if info.id() == rid]
-    else:
-        new = [info for info in infos if info.id() not in before]
-    size = sum(info.memSize() + info.diskSize() for info in new)
-    if new and size <= deser_max_bytes:
-        return ckpt.localCheckpoint(eager=True)  # default (deserialized) level
-    return ckpt
 
 
 def release_local_ckpt(df: DataFrame) -> None:

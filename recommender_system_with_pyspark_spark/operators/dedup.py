@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .partitioning import spread_small_input
 from .text import add_fingerprint, hamming64, shingle_hashes, simhash_signatures, tokens, word_shingles
 
 
@@ -122,6 +121,11 @@ def minhash_near_dup(
     Measured ~4× faster than MLlib's MinHashLSH route on the same data
     with identical semantics.
 
+    No input spread: layout is the caller's. A spread below a quarter of
+    the cores never fired on ≤ 4 cores. The trade: on larger hosts a
+    1-split input computes signatures on one core (spreading it measured
+    1.56 → 1.39 s at sf0.1 on 32 cores).
+
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
     rows_per_band = num_perm // bands
@@ -137,24 +141,11 @@ def minhash_near_dup(
     base = df.select(F.col(id_col).alias("_id"), sets.alias("_sh")).filter(
         F.size("_sh") > 0
     )
-    # Spread ONLY the signature branch, and only from near-single-split
-    # inputs (min_fraction=0.25): it is consumed once and carries the
-    # heavy per-row work (explode + num_perm hashes per shingle), so a
-    # single-split scan would run it on one core — but the verify joins
-    # below must NOT inherit a spread (`base` backs multiple plan
-    # branches with different column pruning, so a spread there
-    # re-executes its shuffle once per branch), and a JVM-codegen stage
-    # that already has a quarter of the session's parallelism loses more
-    # to the corpus-text shuffle than idle cores return (measured at
-    # sf1, 8-split scan on 32 cores: 2.13 → 2.87 s).
-    sig_base = spread_small_input(df, id_col, min_fraction=0.25).select(
-        F.col(id_col).alias("_id"), sets.alias("_sh")
-    ).filter(F.size("_sh") > 0)
     # explode→hash→min-aggregate: the shingle expression is evaluated ONCE
     # per row (a projection-collapse of per-permutation array_min folds
     # would re-derive the shingle array num_perm times); the min-aggregate
     # combines map-side, so the shuffle carries num_perm longs per doc.
-    exploded = sig_base.select("_id", F.explode("_sh").alias("_s"))
+    exploded = base.select("_id", F.explode("_sh").alias("_s"))
     sig = exploded.groupBy("_id").agg(
         *[F.min(F.xxhash64("_s", F.lit(i))).alias(f"_m{i}") for i in range(num_perm)]
     )  # _s is already a long — each permutation is one 8-byte hash
@@ -254,17 +245,16 @@ def simhash_near_dup(
     are found only if they happen to share a band — raise ``bands`` (finer
     sub-keys → more candidates) to extend guaranteed recall instead.
 
+    No input spread (see ``minhash_near_dup``).
+
     Returns (id_a, id_b, hamming) with id_a < id_b.
     """
     if max_hamming is None:
         max_hamming = bands - 1
     if bits % bands:
         raise ValueError(f"bands={bands} must divide bits={bits}")
-    # spread before the per-token signature projection — near-single-split
-    # inputs only (min_fraction=0.25, JVM-codegen work; see minhash note)
     sigs = simhash_signatures(
-        spread_small_input(df, id_col, min_fraction=0.25),
-        text_col, id_col, "simhash", bits, hash_expr
+        df, text_col, id_col, "simhash", bits, hash_expr
     ).select(F.col(id_col).alias("_id"), "simhash")
     width = bits // bands
     banded = sigs.select(

@@ -762,37 +762,6 @@ MP3_SAMPLES_PER_FRAME = 1152  # MPEG-1 Layer III
 MP3_CHANNEL_MODES = ("stereo", "joint", "dual", "mono")
 
 
-def encode_mp3_frames(frame_specs, sample_rate_index: int = 0) -> bytes:
-    """Serialize spec-valid MPEG-1 Layer III frames from a list of
-    ``(bitrate_index, padding, channel_mode)`` triples. Each frame is a
-    4-byte header (sync ``0xFFF``, version 11=MPEG-1, layer 01=III,
-    no-CRC) followed by a deterministic filler payload sized by the
-    Layer-III frame-length rule ``144·bitrate/sample_rate + padding``.
-    A real decoder skips such frames as silence; a real header parser
-    (ours, ffprobe, mp3val) reads them exactly like crawled audio."""
-    out = bytearray()
-    sr = MP3_SAMPLE_RATES[sample_rate_index]
-    if sr is None:
-        raise ValueError("reserved sample-rate index")
-    for bitrate_index, padding, channel_mode in frame_specs:
-        if not 1 <= bitrate_index <= 14:
-            raise ValueError(f"bitrate index {bitrate_index} not in 1..14")
-        if padding not in (0, 1) or not 0 <= channel_mode <= 3:
-            raise ValueError("bad padding/channel_mode")
-        frame_len = (144 * MP3_BITRATES_KBPS[bitrate_index] * 1000) // sr + padding
-        hdr = bytes(
-            (
-                0xFF,
-                0xFB,  # 111 (sync tail) | 11 (MPEG-1) | 01 (Layer III) | 1 (no CRC)
-                (bitrate_index << 4) | (sample_rate_index << 2) | (padding << 1),
-                (channel_mode << 6) | 0b0100,  # mode_ext=0, (c)=0, original=1, emph=0
-            )
-        )
-        body = _mp3_filler(frame_len - 4)
-        out += hdr + body
-    return bytes(out)
-
-
 def parse_mp3_headers(data: bytes) -> "list[tuple[int, int, int]]":
     """Walk a byte stream frame-by-frame: validate each 4-byte header
     (sync, MPEG-1, Layer III, sane bitrate/samplerate indices), compute
@@ -838,7 +807,9 @@ def mp3_header_audit(df: DataFrame, round_to: int = 6) -> DataFrame:
     1152 samples / sample rate), mean bitrate, CBR flag, and the
     channel-mode census — the numbers a corpus pipeline needs BEFORE
     deciding what to transcode. Files with no parseable frame come back
-    with ``n_frames = 0`` and null stats (never a task failure)."""
+    with ``n_frames = 0`` and null stats (never a task failure). Keeps
+    its input's partitioning: the MP3 synthesizers already spread, and a
+    raw single-split media table is the caller's layout decision."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -875,9 +846,7 @@ def mp3_header_audit(df: DataFrame, round_to: int = 6) -> DataFrame:
                 ],
             )
 
-    return spread_small_input(
-        df.select("media_id", "media"), "media_id"
-    ).mapInPandas(batches, MP3_AUDIT_SCHEMA)
+    return df.select("media_id", "media").mapInPandas(batches, MP3_AUDIT_SCHEMA)
 
 
 # --- MP3 round 11: MPEG-2/2.5 + VBR (Xing/VBRI) coverage ----------------------
@@ -1121,7 +1090,7 @@ def mp3_vbr_audit(df: DataFrame, round_to: int = 6) -> DataFrame:
     ground truth the round-10 MPEG-1-CBR walker could not see. Round 12
     adds the LAYER column (I/II/III from the layer-aware walker — crawled
     audio contains Layer II). Unparseable files come back n_frames = 0
-    with null stats, never a task failure."""
+    with null stats, never a task failure. Keeps its input's partitioning."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -1173,9 +1142,7 @@ def mp3_vbr_audit(df: DataFrame, round_to: int = 6) -> DataFrame:
                 ],
             )
 
-    return spread_small_input(
-        df.select("media_id", "media"), "media_id"
-    ).mapInPandas(batches, MP3_VBR_AUDIT_SCHEMA)
+    return df.select("media_id", "media").mapInPandas(batches, MP3_VBR_AUDIT_SCHEMA)
 
 
 def text_to_mp3_vbr_media(
@@ -1268,7 +1235,8 @@ def text_to_mp3_media(
                 arr = np.frombuffer(str(text).encode("utf-8"), dtype=np.uint8)
                 vals = np.resize(arr, n_frames)
                 specs = [(1 + int(v) % 14, int(v) % 2, int(v) % 4) for v in vals]
-                out.append((mid, encode_mp3_frames(specs)))
+                # MPEG-1 Layer III at 44.1 kHz, no tags
+                out.append((mid, encode_mp3_vbr_stream(specs, sample_rate_index=0)))
             yield pd.DataFrame(out, columns=["media_id", "media"])
 
     return spread_small_input(

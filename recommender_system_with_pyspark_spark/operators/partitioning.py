@@ -12,12 +12,17 @@ host; spread across cores the same chain is ~1.1 s).
 ``defaultParallelism`` with ONE hash repartition — and only when the
 input has fewer partitions than that, so it is a NO-OP at deployment
 scale (a 100 TB corpus scans as tens of thousands of splits and never
-takes the shuffle; an explicit ``target`` stays available for callers
-that know better). The explicit-numPartitions shuffle carries the
+takes the shuffle). The explicit-numPartitions shuffle carries the
 ``REPARTITION_BY_NUM`` origin, which AQE's partition coalescing respects
 — the spread cannot be silently merged back to one partition by the
 advisory size (the whole point is distributing CPU work whose per-row
 cost dwarfs its byte size).
+
+Spread ONCE, at the scan or in the synthesizer/trainer that reads it,
+never inside a downstream operator: ``mapInPandas`` and narrow stages
+keep the spread count, so an operator-internal probe only pays to
+compile the upstream chain (118–170 ms for the MP3 codec chains, sf0.1,
+4 cores).
 
 Determinism: hash partitioning by a key column is a pure function of the
 data (same rows → same placement, under retries too), and every caller
@@ -36,10 +41,11 @@ from pyspark.sql import functions as F
 
 # Partition-count probe memo. ``df.rdd.getNumPartitions()`` compiles the
 # frame's physical plan a SECOND time (the real query recompiles after the
-# repartition is appended) — measured 50-900 ms of driver time per probe on
-# the codec chains. The partition count of a semantically identical plan
-# inside one application is stable (it is a function of the file layout and
-# session parallelism), so key the memo on (applicationId, semanticHash).
+# repartition is appended). Every caller probes a scan plan: 44–79 ms of
+# driver time uncached, ~1 ms from the memo (sf0.1, 4 cores).
+# The partition count of a semantically identical plan inside one
+# application is stable (it is a function of the file layout and session
+# parallelism), so key the memo on (applicationId, semanticHash).
 # A (vanishingly unlikely) 32-bit hash collision can only mis-skip or
 # mis-add a spread — a performance decision, never a correctness one.
 # Staleness (ADVICE r13): the memo never invalidates WITHIN an
@@ -74,32 +80,16 @@ def _num_partitions(df: DataFrame) -> int | None:
     return n
 
 
-def spread_small_input(
-    df: DataFrame,
-    key_col: str | None = None,
-    target: int | None = None,
-    min_fraction: float = 1.0,
-) -> DataFrame:
-    """Repartition ``df`` up to ``target`` (default: defaultParallelism)
-    partitions when it currently has fewer than ``target * min_fraction``;
-    pass through unchanged otherwise. Hash-partitions by ``key_col`` when
-    given (deterministic, sort-free), round-robin otherwise.
-
-    ``min_fraction`` calibrates the fire threshold to the work's per-byte
-    cost. Python-boundary stages (Arrow codecs) win from the spread even
-    at a few existing partitions — keep the default 1.0 (fire whenever
-    below full parallelism). JVM-codegen stages amortize at modest
-    parallelism and the shuffle is pure cost past that — measured round
-    13 on MinHash signatures at sf1 (8-split scan, 32 cores): spreading
-    8→32 cost 2.13→2.87 s while the same spread from a 1-split scan at
-    sf0.1 won 1.56→1.39 s. Such callers pass ``min_fraction=0.25`` (fire
-    only below a quarter of the session parallelism)."""
-    sc = df.sparkSession.sparkContext
-    tgt = int(target) if target is not None else sc.defaultParallelism
+def spread_small_input(df: DataFrame, key_col: str | None = None) -> DataFrame:
+    """Repartition ``df`` to defaultParallelism partitions when it has
+    fewer; pass through unchanged otherwise. Hash-partitions by
+    ``key_col`` when given (deterministic, sort-free), round-robin
+    otherwise."""
+    tgt = df.sparkSession.sparkContext.defaultParallelism
     if tgt <= 1:
         return df
     cur = _num_partitions(df)
-    if cur is None or cur >= max(1.0, tgt * min_fraction):
+    if cur is None or cur >= tgt:
         return df
     if key_col is not None:
         return df.repartition(tgt, F.col(key_col))

@@ -336,16 +336,14 @@ def negative_sample(
         raise ValueError("k and oversample must be >= 1")
     # LAZY serialized checkpoints with ONE fused stats job as their
     # materializer (round 14): positives and the distinct item set used to
-    # take four eager materialization jobs (ser + small-frame promotion
-    # each) plus a count job (draw modulus) plus two_stage_rank's eager
+    # take four eager materialization jobs plus a count job (draw modulus) plus two_stage_rank's eager
     # approx-quantile job — seven actions before the query's own plan ran.
     # The single aggregate below (count + percentile_approx over the item
     # ids) computes BOTH driver scalars in one pass and, being the first
     # action over the lazy checkpoints, persists pos and ids as a side
     # effect: 1 job total. SERIALIZED level throughout — the safe
-    # direction at fact scale (the sf100 OOM class); forgoing the
-    # small-frame deserialized promotion costs only per-reuse
-    # deserialization of catalog-sized blocks. Lazy checkpoints carry no
+    # direction at fact scale (the sf100 OOM class); it costs only
+    # per-reuse deserialization of catalog-sized blocks. Lazy checkpoints carry no
     # size stats, so Catalyst cannot UNDER-estimate them into stray
     # broadcasts (the sf10 failure eager checkpointing was added for);
     # the two data-scale joins stay pinned to shuffle strategies below.

@@ -741,7 +741,8 @@ def embedding_near_dup(
     return (
         a.join(b, cond)
         .withColumn("sim", F.round(_dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")), 6))
-        .filter(F.col("sim") >= threshold)
+        # Spark orders NaN above every double; a NaN vector pairs with nothing
+        .filter((F.col("sim") >= threshold) & ~F.isnan("sim"))
         .select("id_a", "id_b", "sim")
     )
 
@@ -1383,9 +1384,8 @@ def semantic_dedup_pairs(
     # embedding catalog carrying the raw vector per row — exactly the
     # data-scale shape whose spilled deserialized blocks re-promote into
     # the heap at the first tier that spills (the sf100 negative-sample
-    # OOM class); lazy, so the size-tiered auto policy cannot measure it
-    # and the safe level is pinned. (_u is consumed inside the assign pass
-    # and dropped — the checkpoint stores one vector copy, not two.)
+    # OOM class). (_u is consumed inside the assign pass and dropped —
+    # the checkpoint stores one vector copy, not two.)
     members = local_ckpt_ser(
         unit.select("_id", "_v", "_u").mapInPandas(
             _assign_fn, "_id long, _v array<double>, _cell int, _dist double"
@@ -1407,7 +1407,13 @@ def semantic_dedup_pairs(
     radii_rows = (
         members.groupBy("_cell").agg(F.max("_dist").alias("radius")).collect()
     )
-    radius = {int(r["_cell"]): float(r["radius"]) for r in radii_rows}
+    # A NaN center (a NaN input row) draws every member, and Arrow nulls
+    # their NaN _dist: an unknown radius is infinite, and the bound below
+    # keeps a block unless it is provably too far (NaN compares false).
+    radius = {
+        int(r["_cell"]): math.inf if r["radius"] is None or math.isnan(r["radius"]) else r["radius"]
+        for r in radii_rows
+    }
 
     def _euclid_py(a: "list[float]", b: "list[float]") -> float:
         acc = 0.0  # same sequential left fold as _euclid — identical IEEE ops
@@ -1425,8 +1431,8 @@ def semantic_dedup_pairs(
         for ci in radius
         for cj in radius
         if ci <= cj
-        and _euclid_py(centers_py[ci], centers_py[cj])
-        <= radius[ci] + radius[cj] + eps_d
+        and not _euclid_py(centers_py[ci], centers_py[cj])
+        > radius[ci] + radius[cj] + eps_d
     )
     cell_pairs = F.broadcast(
         df.sparkSession.createDataFrame(pair_rows, "ci int, cj int")

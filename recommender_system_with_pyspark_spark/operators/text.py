@@ -20,7 +20,7 @@ from collections.abc import Callable, Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import local_ckpt_auto, local_ckpt_ser
+from .checkpointing import local_ckpt_ser
 from .partitioning import spread_small_input
 
 TOKEN_SPLIT_RE = r"\s+"
@@ -477,12 +477,9 @@ def bigram_logprob(
     # unpersist (which a lazy-returning function has no safe place to
     # call), while checkpoint blocks are reclaimed by the ContextCleaner
     # as soon as the caller drops the result.
-    per_doc = local_ckpt_auto(
+    per_doc = local_ckpt_ser(
         pairs.groupBy(id_col, "w1", "w2").agg(F.count(F.lit(1)).alias("c"))
-    )  # token-scale rows: size-tiered level (operators/checkpointing.py) —
-    # serialized at corpus scale (the sf100 OOM class), promoted to the
-    # deserialized default when the materialized frame measures small (the
-    # +52% sf0.1 deserialize-per-reuse tax, round-10 verdict finding #1)
+    )  # token-scale rows: serialized level (operators/checkpointing.py)
     bigrams = per_doc.groupBy("w1", "w2").agg(F.sum("c").alias("c12"))
     unigram_ctx = bigrams.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab_size = df.select(F.explode(tokens(text_col)).alias("t")).agg(

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io import load_table
-from .operators.checkpointing import local_ckpt_auto
+from .operators.checkpointing import local_ckpt_ser
 from .operators import dedup as D
 from .operators import multimodal as M
 from .operators import text as X
@@ -75,11 +75,9 @@ def simhash_family_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     clones = salted.filter(F.col("doc_id") % 50 == 0).withColumn(
         "doc_id", F.col("doc_id") + F.lit(1_000_000)
     )
-    # corpus-scale rewritten text frame, read by both family runs: the
-    # size-tiered checkpoint keeps it serialized past the promotion
-    # threshold (the sf100 spilled-deserialized-block OOM class) and at
-    # the default level below it
-    docs = local_ckpt_auto(salted.unionByName(clones))  # 2 passes
+    # corpus-scale rewritten text frame, read by both family runs:
+    # serialized level (the sf100 spilled-deserialized-block OOM class)
+    docs = local_ckpt_ser(salted.unionByName(clones))  # 2 passes
     xx = D.simhash_near_dup(docs, "text", "doc_id", max_hamming=3, bands=4).select(
         "id_a", "id_b", F.lit(True).alias("in_xxhash64")
     )

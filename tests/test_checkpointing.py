@@ -8,22 +8,17 @@ What must hold, and why a silent PySpark behavior change would matter:
   graphs (the sf100 negative-sample OOM class, SCALING.md round 10). If a
   future PySpark release changed the ``storageLevel=`` plumbing, the OOM
   class would return with zero test signal.
-- ``local_ckpt_auto`` must promote provably-small frames to the default
-  deserialized level (the sf0.1 +52% reuse-tax fix) and keep large frames
-  serialized (measured by actual cached bytes, not estimates).
 - eager/lazy semantics must pass through: a lazy request materializes
-  nothing until an action, and degrades to the serialized level (a lazy
-  frame cannot be sized).
+  nothing until an action.
+- data-scale call sites hold ONE serialized copy: ``bigram_logprob``'s
+  per-doc counts are not promoted to a second, deserialized copy.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from recommender_system_with_pyspark_spark.operators.checkpointing import (
-    local_ckpt_auto,
-    local_ckpt_ser,
-)
+from recommender_system_with_pyspark_spark.operators.checkpointing import local_ckpt_ser
 
 
 def _new_infos(spark, before_ids):
@@ -62,34 +57,17 @@ def test_local_ckpt_ser_lazy_materializes_only_on_action(spark):
     assert new and all(not i.storageLevel().deserialized() for i in new)
 
 
-def test_local_ckpt_auto_promotes_small_frames(spark):
-    df = spark.range(1000).select("id", (F.col("id") % 7).alias("k"))
-    before = _cached_ids(spark)
-    ck = local_ckpt_auto(df)  # KBs — far under the default threshold
-    new = _new_infos(spark, before)
-    # both tiers visible: the sizing (serialized) pass and the promoted copy
-    assert any(i.storageLevel().deserialized() for i in new), (
-        "small frame must be promoted to the deserialized default level"
+def test_bigram_logprob_holds_one_serialized_copy(spark):
+    """The per-doc bigram counts are checkpointed once, serialized."""
+    from recommender_system_with_pyspark_spark.operators.text import bigram_logprob
+
+    docs = spark.createDataFrame(
+        [(i, f"the cat sat on mat {i % 5} the cat") for i in range(200)],
+        "doc_id long, text string",
     )
-    assert ck.count() == 1000
-
-
-def test_local_ckpt_auto_keeps_large_frames_serialized(spark):
-    df = spark.range(5000).select("id")
     before = _cached_ids(spark)
-    ck = local_ckpt_auto(df, deser_max_bytes=1)  # force the "large" branch
+    out = bigram_logprob(docs)
     new = _new_infos(spark, before)
-    assert new and all(not i.storageLevel().deserialized() for i in new)
-    assert ck.count() == 5000
-
-
-def test_local_ckpt_auto_lazy_degrades_to_serialized(spark):
-    df = spark.range(800).select("id")
-    before = _cached_ids(spark)
-    ck = local_ckpt_auto(df, eager=False)
-    assert not _new_infos(spark, before), "lazy auto-checkpoint ran a job"
-    assert ck.count() == 800
-    new = _new_infos(spark, before)
-    assert new and all(not i.storageLevel().deserialized() for i in new), (
-        "a lazy frame cannot be sized; it must stay at the serialized level"
-    )
+    assert len(new) == 1, [i.name() for i in new]
+    assert new[0].storageLevel().deserialized() is False
+    assert out.count() == 200

@@ -113,3 +113,22 @@ def test_mp3_vbr_audit_excludes_metadata_frame(spark):
     assert got[2]["xing_match"] is None
     assert got[3]["xing_match"] is False and got[3]["xing_frames"] == 99
     assert got[4]["n_frames"] == 0 and got[4]["duration_ms"] is None
+
+
+@pytest.mark.parametrize(
+    "synth, audit",
+    [
+        (M.text_to_mp3_media, M.mp3_header_audit),
+        (M.text_to_mp3_vbr_media, M.mp3_vbr_audit),
+    ],
+)
+def test_mp3_audits_keep_input_partitioning(spark, synth, audit):
+    """The audits never re-spread their input: layout is set where the
+    media is read or synthesized, so a 1-partition input stays 1."""
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} text") for i in range(12)], "doc_id long, text string"
+    )
+    media = synth(docs, n_frames=4).coalesce(1)
+    out = audit(media)
+    assert out.rdd.getNumPartitions() == 1
+    assert out.count() == 12

@@ -130,12 +130,12 @@ def test_bpe_encode_cached_cross_batch_cache(spark):
 def test_mp3_encode_parse_roundtrip():
     from recommender_system_with_pyspark_spark.operators.multimodal import (
         MP3_BITRATES_KBPS,
-        encode_mp3_frames,
+        encode_mp3_vbr_stream,
         parse_mp3_headers,
     )
 
     specs = [(1, 0, 0), (14, 1, 3), (9, 1, 1), (5, 0, 2)]
-    data = encode_mp3_frames(specs)
+    data = encode_mp3_vbr_stream(specs, sample_rate_index=0)
     frames = parse_mp3_headers(data)
     assert [(MP3_BITRATES_KBPS.index(k), m) for k, _, m in frames] == [
         (b, m) for b, _, m in specs
@@ -145,11 +145,11 @@ def test_mp3_encode_parse_roundtrip():
 
 def test_mp3_parser_stops_cleanly_on_garbage():
     from recommender_system_with_pyspark_spark.operators.multimodal import (
-        encode_mp3_frames,
+        encode_mp3_vbr_stream,
         parse_mp3_headers,
     )
 
-    good = encode_mp3_frames([(8, 0, 0), (8, 0, 0)])
+    good = encode_mp3_vbr_stream([(8, 0, 0), (8, 0, 0)], sample_rate_index=0)
     # leading ID3-ish tag -> no sync at offset 0 -> zero frames, no crash
     assert parse_mp3_headers(b"ID3\x04\x00" + good) == []
     # truncated final frame is dropped, prior frames kept

@@ -1,6 +1,5 @@
 """Round-12 tests: GEMM boundary tie-break, IVF probe guards + freshness
-contract, recall-targeting helper, size-tiered checkpoint attribution,
-Layer I/II MPEG-audio walker."""
+contract, recall-targeting helper, Layer I/II MPEG-audio walker."""
 
 from __future__ import annotations
 
@@ -178,50 +177,6 @@ def test_recall_curve_theory_matches_measurement(spark, tmp_path):
     full = select_n_probe(spark, path, anchors, target_recall=1.0, k=4)
     assert full["recall"] == 1.0
     assert full["coarse"] == (full["n_probe"] > 2)
-
-
-def test_local_ckpt_auto_sizes_own_rdd_only(spark):
-    """ADVICE r11: the before/after storage diff attributed ANY
-    concurrently cached RDD to the frame being sized. The policy now
-    reads the checkpointed Dataset's own RDD id off its LogicalRDD —
-    promotion of a small frame must not be blocked by an unrelated large
-    cached RDD that appears in the same window."""
-    from pyspark import StorageLevel
-
-    from recommender_system_with_pyspark_spark.operators.checkpointing import (
-        local_ckpt_auto,
-        local_ckpt_ser,
-    )
-
-    # the reflective id walk: the ckpt's analyzed plan is the LogicalRDD
-    # over exactly the persisted RDD
-    small = local_ckpt_ser(spark.range(1000).selectExpr("id", "id * 2 AS v"))
-    rid = small._jdf.queryExecution().analyzed().rdd().id()
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    assert rid in [i.id() for i in infos]
-
-    # an unrelated big-ish cached RDD in the same context must not block
-    # promotion of a tiny frame (pre-fix, any concurrent cache inside the
-    # sizing window inflated `new`; own-id filtering is immune even to
-    # caches landing mid-call, which a test cannot schedule — this pins
-    # the mechanism on the closest deterministic shape)
-    other = spark.range(2_000_000).selectExpr("id", "id * 3 AS w")
-    other.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    try:
-        out = local_ckpt_auto(spark.range(500).selectExpr("id", "id + 1 AS u"))
-        assert out.count() == 500
-        # promoted to the deserialized default level (read off the block
-        # manager via the frame's own RDD id — df.rdd is a fresh
-        # conversion RDD whose level is always NONE)
-        out_rid = out._jdf.queryExecution().analyzed().rdd().id()
-        lvl = next(
-            i.storageLevel()
-            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            if i.id() == out_rid
-        )
-        assert lvl.deserialized()
-    finally:
-        other.unpersist()
 
 
 def test_mp3_layer12_roundtrip_all_versions(spark):

@@ -46,6 +46,30 @@ def test_embedding_near_dup_threshold(spark):
     assert pairs == {(0, 1)}
 
 
+def test_exact_near_dup_paths_ignore_a_nan_vector(spark):
+    """One NaN row among finite vectors: all three exact near-dup paths
+    return exactly the finite rows' pairs. Before, the fold paired the NaN
+    row with every vector (Spark orders NaN above every double), and
+    ``semantic_dedup_pairs`` crashed on a null cell radius whenever md5
+    seeding picked the NaN row as a center."""
+    nan_row = spark.createDataFrame(
+        [(5, [float("nan")] * 8)], "vec_id long, embedding array<double>"
+    )
+    df = _vecs(spark).unionByName(nan_row)
+
+    def pairs(out):
+        return sorted((r["id_a"], r["id_b"], r["sim"]) for r in out.collect())
+
+    finite = pairs(S.embedding_near_dup(_vecs(spark), threshold=0.95))
+    assert [p[:2] for p in finite] == [(0, 1)]
+    assert pairs(S.embedding_near_dup(df, threshold=0.95)) == finite
+    assert pairs(S.embedding_near_dup_blocked(df, threshold=0.95, n_chunks=2)) == finite
+    for seed in (1, 2, 3, 4):
+        for n_cells in (1, 2, 3):
+            got = S.semantic_dedup_pairs(df, threshold=0.95, n_cells=n_cells, seed=seed)
+            assert pairs(got) == finite, (seed, n_cells)
+
+
 def test_embedding_near_dup_blocked_matches_pair_join(spark, sf_tiny):
     # the distributed block-matrix path must be EXACT: same pairs + sims
     # (6 dp) as the native pair-join ground truth, for any chunk count
