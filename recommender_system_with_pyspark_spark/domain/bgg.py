@@ -165,9 +165,9 @@ def als_workflow(
         .transform(cleaned)
         .withColumn("UserId", F.col("UserId").cast("int"))
     )
-    # cache: the TVS grid re-consumes this frame once per fit (4x) plus the
-    # best-model refit and the test transform — without it the whole
-    # index+prune lineage (two shuffles) replays per fit
+    # cache: als_prediction reads this frame twice, in its int32 id check
+    # and in the fit (which caches an uncached input itself) — without it
+    # the whole index+prune lineage (two shuffles) runs twice
     pruned = R.prune_sparse_entities(
         indexed, "BGGId", "UserId", min_game_ratings, min_user_ratings
     ).cache()

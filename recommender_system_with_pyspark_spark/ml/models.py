@@ -2,8 +2,9 @@
 
 The reference's six model functions (`bgrfunctions.py:179-366`) share one
 skeleton: randomSplit → TrainValidationSplit over a 2×2 grid → evaluate →
-save. Re-expressed once, parameterized by estimator; differences from the
-reference are deliberate and documented:
+save. :func:`tuned_fit` is that skeleton, written once; each model
+function only builds its estimator, grid and evaluators. Differences from
+the reference are deliberate and documented:
 
 - ``randomSplit`` is ALWAYS seeded (reference M9 quirk: unseeded splits make
   golden outputs non-reproducible).
@@ -25,6 +26,9 @@ from pyspark.sql import DataFrame
 class FitResult:
     """A fitted model with its held-out metrics.
 
+    ``predictions`` are the scored test rows, lazy: reading them after
+    :func:`tuned_fit` returns recomputes the split and the transform.
+
     ``id_maps`` holds the ``dense_id_compaction`` maps of an ALS fit, one
     per id column (``None`` where the ids already fit int32); pass them to
     :func:`recommend_for_all_users` to get the caller's ids back.
@@ -38,34 +42,89 @@ class FitResult:
     id_maps: dict = field(default_factory=dict)
 
 
-def _tvs(estimator: Estimator, evaluator, grid, seed: int, parallelism: int = 4):
-    """M17 — TrainValidationSplit, trainRatio=0.8 (`bgrfunctions.py:191`).
-    Grid fits run in parallel (the reference fits serially)."""
+def tuned_fit(estimator: Estimator, df: DataFrame, grid, evaluators: dict, seed: int) -> FitResult:
+    """M9 + M17/M18 — seeded 80/20 split → TrainValidationSplit
+    (trainRatio=0.8, `bgrfunctions.py:191`) over ``grid`` → every
+    evaluator on the held-out predictions.
+
+    ``evaluators`` is an ordered ``{metric name: evaluator}``: the first
+    one selects the grid point, and the dict order is the order of
+    ``FitResult.metrics``. ``best_params`` is the chosen grid point by
+    param name. A one-point grid is fitted on the train split directly,
+    which is the model the TVS refit would return. Grid fits run in
+    parallel (the reference fits serially).
+
+    An uncached input is cached for the call and released before it
+    returns, so it is read once: the TVS's own split, the refit and every
+    metric read the cache, and both splits come from the same rows in the
+    same partitions. A caller's cache is used as it is and left alone.
+    The predictions are not cached: a cached plan skips AQE's final-stage
+    coalescing, which would change the order of the metric sums."""
+    import numpy as np
+    from pyspark import StorageLevel
     from pyspark.ml.tuning import TrainValidationSplit
 
-    return TrainValidationSplit(
-        estimator=estimator,
-        estimatorParamMaps=grid,
-        evaluator=evaluator,
-        trainRatio=0.8,
-        seed=seed,
-        parallelism=parallelism,
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.cache()
+    try:
+        train, test = df.randomSplit([0.8, 0.2], seed=seed)
+        if len(grid) == 1:
+            point, best = grid[0], estimator.fit(train, grid[0])
+        else:
+            select = next(iter(evaluators.values()))
+            tvs = TrainValidationSplit(
+                estimator=estimator, estimatorParamMaps=grid, evaluator=select,
+                trainRatio=0.8, seed=seed, parallelism=4,
+            ).fit(train)
+            # the pick TrainValidationSplit makes
+            pick = np.argmax if select.isLargerBetter() else np.argmin
+            point, best = grid[int(pick(tvs.validationMetrics))], tvs.bestModel
+        pred = best.transform(test)
+        metrics = {name: ev.evaluate(pred) for name, ev in evaluators.items()}
+    finally:
+        if owned:
+            df.unpersist()
+    return FitResult(
+        model=best,
+        metrics=metrics,
+        best_params={param.name: value for param, value in point.items()},
+        predictions=pred,
     )
 
 
-def _cv(estimator: Estimator, evaluator, grid, seed: int, num_folds: int = 3, parallelism: int = 4):
-    """CrossValidator — imported but unused by the reference
-    (`bgrfunctions.py:7`); exposed as the better-variance alternative."""
-    from pyspark.ml.tuning import CrossValidator
+def _grid(*axes) -> list:
+    """ParamGridBuilder over ``(param, values)`` pairs, in the given order."""
+    from pyspark.ml.tuning import ParamGridBuilder
 
-    return CrossValidator(
-        estimator=estimator,
-        estimatorParamMaps=grid,
-        evaluator=evaluator,
-        numFolds=num_folds,
-        seed=seed,
-        parallelism=parallelism,
-    )
+    builder = ParamGridBuilder()
+    for param, values in axes:
+        builder.addGrid(param, list(values))
+    return builder.build()
+
+
+def _regression_evaluators(label_col: str) -> dict:
+    from pyspark.ml.evaluation import RegressionEvaluator
+
+    return {
+        m: RegressionEvaluator(metricName=m, labelCol=label_col, predictionCol="prediction")
+        for m in ("rmse", "r2")
+    }
+
+
+def _classification_evaluators(label_col: str, compat_hard_roc: bool) -> dict:
+    from pyspark.ml.evaluation import BinaryClassificationEvaluator, MulticlassClassificationEvaluator
+
+    return {
+        "accuracy": MulticlassClassificationEvaluator(
+            metricName="accuracy", labelCol=label_col, predictionCol="prediction"
+        ),
+        "areaUnderROC": BinaryClassificationEvaluator(
+            labelCol=label_col,
+            # reference quirk M21: rawPredictionCol='prediction' → ROC ≈ 0.5
+            rawPredictionCol="prediction" if compat_hard_roc else "rawPrediction",
+        ),
+    }
 
 
 def als_estimator(spark, **params):
@@ -102,7 +161,8 @@ def als_prediction(
 ) -> FitResult:
     """M10 — ALS with the reference's grid (`bgrfunctions.py:179-201`):
     rank∈{20,30} × regParam∈{0.1,0.01}, coldStartStrategy='drop', seed=1,
-    selected by RMSE on a seeded 80/20 split.
+    selected by RMSE on a seeded 80/20 split. ``tune=False`` fits the
+    grid's first point (``ranks[0]``, ``reg_params[0]``) alone.
 
     Scale: every ALS iteration shuffles user/item factor blocks, and ALS
     partitions by its own block counts, not by
@@ -111,9 +171,6 @@ def als_prediction(
     serves the TVS grid fits, the refit and ``tune=False`` alike; rank is
     the other lever. checkpointInterval=10 truncates the 20-iteration
     lineage."""
-    from pyspark.ml.evaluation import RegressionEvaluator
-    from pyspark.ml.tuning import ParamGridBuilder
-
     # checkpointInterval is a silent no-op without a checkpoint dir, and at
     # maxIter=20 the factor RDD lineage is deep enough to StackOverflow task
     # serialization (hit at 2M rows already). Set one if the session has
@@ -129,71 +186,20 @@ def als_prediction(
     # exact passthrough (same object, so split/hashes unchanged) otherwise.
     from ..operators.relational import dense_id_compaction, restore_ids
 
-    ratings, _idmaps = dense_id_compaction(ratings, [user_col, item_col])
-
-    train, test = ratings.randomSplit([0.8, 0.2], seed=seed)
+    ratings, id_maps = dense_id_compaction(ratings, [user_col, item_col])
     als = als_estimator(
         ratings.sparkSession, userCol=user_col, itemCol=item_col, ratingCol=rating_col,
         maxIter=max_iter, seed=seed, checkpointInterval=10,
     )
-    rmse_eval = RegressionEvaluator(metricName="rmse", labelCol=rating_col, predictionCol="prediction")
-    r2_eval = RegressionEvaluator(metricName="r2", labelCol=rating_col, predictionCol="prediction")
-    if tune:
-        grid = (
-            ParamGridBuilder()
-            .addGrid(als.rank, list(ranks))
-            .addGrid(als.regParam, list(reg_params))
-            .build()
-        )
-        best = _tvs(als, rmse_eval, grid, seed).fit(train).bestModel
-    else:
-        best = als.setRank(ranks[0]).setRegParam(reg_params[0]).fit(train)
-    pred = best.transform(test)
+    grid = _grid((als.rank, ranks), (als.regParam, reg_params))
+    res = tuned_fit(als, ratings, grid if tune else grid[:1], _regression_evaluators(rating_col), seed)
     # translate model output back to the caller's original (long) ids —
     # restore_ids is a no-op in the passthrough case
-    pred = restore_ids(
-        restore_ids(pred, user_col, _idmaps[user_col]), item_col, _idmaps[item_col]
+    res.predictions = restore_ids(
+        restore_ids(res.predictions, user_col, id_maps[user_col]), item_col, id_maps[item_col]
     )
-    return FitResult(
-        model=best,
-        metrics={"rmse": rmse_eval.evaluate(pred), "r2": r2_eval.evaluate(pred)},
-        best_params={"rank": best.rank, "regParam": best._java_obj.parent().getRegParam() if tune else reg_params[0]},
-        predictions=pred,
-        id_maps=_idmaps,
-    )
-
-
-def _classification_fit(
-    estimator,
-    df: DataFrame,
-    grid,
-    label_col: str,
-    seed: int,
-    compat_hard_roc: bool = False,
-) -> FitResult:
-    """Shared classifier skeleton (`bgrfunctions.py:238-366`): seeded split →
-    TVS(accuracy) → accuracy + areaUnderROC on the held-out test."""
-    from pyspark.ml.evaluation import (
-        BinaryClassificationEvaluator,
-        MulticlassClassificationEvaluator,
-    )
-
-    train, test = df.randomSplit([0.8, 0.2], seed=seed)
-    acc_eval = MulticlassClassificationEvaluator(
-        metricName="accuracy", labelCol=label_col, predictionCol="prediction"
-    )
-    roc_eval = BinaryClassificationEvaluator(
-        labelCol=label_col,
-        # reference quirk M21: rawPredictionCol='prediction' → ROC ≈ 0.5
-        rawPredictionCol="prediction" if compat_hard_roc else "rawPrediction",
-    )
-    best = _tvs(estimator, acc_eval, grid, seed).fit(train).bestModel
-    pred = best.transform(test)
-    return FitResult(
-        model=best,
-        metrics={"accuracy": acc_eval.evaluate(pred), "areaUnderROC": roc_eval.evaluate(pred)},
-        predictions=pred,
-    )
+    res.id_maps = id_maps
+    return res
 
 
 def fm_regressor(
@@ -205,43 +211,21 @@ def fm_regressor(
     seed: int = 1,
 ) -> FitResult:
     """M12 — FMRegressor, grid stepSize×factorSize (`bgrfunctions.py:204-236`)."""
-    from pyspark.ml.evaluation import RegressionEvaluator
     from pyspark.ml.regression import FMRegressor
-    from pyspark.ml.tuning import ParamGridBuilder
 
-    train, test = df.randomSplit([0.8, 0.2], seed=seed)
     fm = FMRegressor(featuresCol=features_col, labelCol=label_col, seed=seed)
-    rmse_eval = RegressionEvaluator(metricName="rmse", labelCol=label_col, predictionCol="prediction")
-    r2_eval = RegressionEvaluator(metricName="r2", labelCol=label_col, predictionCol="prediction")
-    grid = (
-        ParamGridBuilder()
-        .addGrid(fm.stepSize, list(step_sizes))
-        .addGrid(fm.factorSize, list(factor_sizes))
-        .build()
-    )
-    best = _tvs(fm, rmse_eval, grid, seed).fit(train).bestModel
-    pred = best.transform(test)
-    return FitResult(
-        model=best,
-        metrics={"rmse": rmse_eval.evaluate(pred), "r2": r2_eval.evaluate(pred)},
-        predictions=pred,
-    )
+    grid = _grid((fm.stepSize, step_sizes), (fm.factorSize, factor_sizes))
+    return tuned_fit(fm, df, grid, _regression_evaluators(label_col), seed)
 
 
 def fm_classifier(df: DataFrame, features_col: str = "features", label_col: str = "label",
                   seed: int = 1, compat_hard_roc: bool = False) -> FitResult:
     """M13 — FMClassifier (`bgrfunctions.py:238-269`)."""
     from pyspark.ml.classification import FMClassifier
-    from pyspark.ml.tuning import ParamGridBuilder
 
     fm = FMClassifier(featuresCol=features_col, labelCol=label_col, seed=seed)
-    grid = (
-        ParamGridBuilder()
-        .addGrid(fm.stepSize, [0.1, 0.01])
-        .addGrid(fm.factorSize, [1, 2])
-        .build()
-    )
-    return _classification_fit(fm, df, grid, label_col, seed, compat_hard_roc)
+    grid = _grid((fm.stepSize, [0.1, 0.01]), (fm.factorSize, [1, 2]))
+    return tuned_fit(fm, df, grid, _classification_evaluators(label_col, compat_hard_roc), seed)
 
 
 def logistic_regression(df: DataFrame, features_col: str = "features", label_col: str = "label",
@@ -249,16 +233,10 @@ def logistic_regression(df: DataFrame, features_col: str = "features", label_col
     """M14 — LogisticRegression, grid regParam×maxIter
     (`bgrfunctions.py:271-303`)."""
     from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.tuning import ParamGridBuilder
 
     lr = LogisticRegression(featuresCol=features_col, labelCol=label_col)
-    grid = (
-        ParamGridBuilder()
-        .addGrid(lr.regParam, [0.1, 0.01])
-        .addGrid(lr.maxIter, [50, 100])
-        .build()
-    )
-    return _classification_fit(lr, df, grid, label_col, seed, compat_hard_roc)
+    grid = _grid((lr.regParam, [0.1, 0.01]), (lr.maxIter, [50, 100]))
+    return tuned_fit(lr, df, grid, _classification_evaluators(label_col, compat_hard_roc), seed)
 
 
 def decision_tree(df: DataFrame, features_col: str = "features", label_col: str = "label",
@@ -281,18 +259,12 @@ def decision_tree(df: DataFrame, features_col: str = "features", label_col: str 
     (dominated by MLlib's dense per-row binned conversion, which is
     rows × dims regardless of bins)."""
     from pyspark.ml.classification import DecisionTreeClassifier
-    from pyspark.ml.tuning import ParamGridBuilder
 
     dt = DecisionTreeClassifier(featuresCol=features_col, labelCol=label_col, seed=seed)
     if max_bins is not None:
         dt.setMaxBins(max_bins)
-    grid = (
-        ParamGridBuilder()
-        .addGrid(dt.maxDepth, [5, 10])
-        .addGrid(dt.minInfoGain, list(min_info_gains))
-        .build()
-    )
-    return _classification_fit(dt, df, grid, label_col, seed, compat_hard_roc)
+    grid = _grid((dt.maxDepth, [5, 10]), (dt.minInfoGain, min_info_gains))
+    return tuned_fit(dt, df, grid, _classification_evaluators(label_col, compat_hard_roc), seed)
 
 
 def random_forest(df: DataFrame, features_col: str = "features", label_col: str = "label",
@@ -307,20 +279,14 @@ def random_forest(df: DataFrame, features_col: str = "features", label_col: str 
     that forbid every split. Default grid here is sane; pass (20, 30) for
     parity-with-the-bug experiments."""
     from pyspark.ml.classification import RandomForestClassifier
-    from pyspark.ml.tuning import ParamGridBuilder
 
     rf = RandomForestClassifier(
         featuresCol=features_col, labelCol=label_col, seed=seed, numTrees=num_trees
     )
     if max_bins is not None:
         rf.setMaxBins(max_bins)
-    grid = (
-        ParamGridBuilder()
-        .addGrid(rf.maxDepth, [5, 10])
-        .addGrid(rf.minInfoGain, list(min_info_gains))
-        .build()
-    )
-    return _classification_fit(rf, df, grid, label_col, seed, compat_hard_roc)
+    grid = _grid((rf.maxDepth, [5, 10]), (rf.minInfoGain, min_info_gains))
+    return tuned_fit(rf, df, grid, _classification_evaluators(label_col, compat_hard_roc), seed)
 
 
 def recommend_for_all_users(model, k: int = 10, id_maps: dict | None = None) -> DataFrame:

@@ -441,11 +441,11 @@ def ivf_topk(
     from pyspark.sql import Window
 
     cand = _as_double(
-        candidates.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")), "_cv"
-    ).withColumn("_vec", array_to_vector("_cv"))
+        candidates.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nv")), "_nv"
+    ).withColumn("_vec", array_to_vector("_nv"))
     km = KMeans(k=n_cells, seed=seed, featuresCol="_vec", predictionCol="_cell", maxIter=max_iter)
     model = km.fit(cand)
-    cand_cells = model.transform(cand).select("neighbor_id", "_cv", "_cell")
+    cand_cells = model.transform(cand).select("neighbor_id", "_nv", "_cell")
 
     centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
     centers_df = queries.sparkSession.createDataFrame(centers, "cell int, center array<double>")
@@ -462,7 +462,7 @@ def ivf_topk(
         "query_id", "_qv", F.col("cell").alias("_cell")
     )
     pairs = probed.join(cand_cells, "_cell").filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.withColumn("sim", F.round(cosine(F.col("_qv"), F.col("_cv")), 6))
+    scored = pairs.withColumn("sim", F.round(cosine(F.col("_qv"), F.col("_nv")), 6))
     return _rank_topk(scored, k)
 
 
@@ -526,20 +526,20 @@ def ivf_topk_exact(
     from pyspark.ml.functions import array_to_vector
     from pyspark.sql import Window
 
-    cand_cols = [F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")]
+    cand_cols = [F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nv")]
     if pos_col is not None:
         cand_cols.append(F.col(pos_col).alias("_cp"))
     cand = (
-        _as_double(candidates.select(*cand_cols), "_cv")
-        .withColumn("_cn", F.greatest(_norm(F.col("_cv")), F.lit(1e-30)))
-        .withColumn("_cnv", F.transform(F.col("_cv"), lambda x: x / F.col("_cn")))
+        _as_double(candidates.select(*cand_cols), "_nv")
+        .withColumn("_cn", F.greatest(_norm(F.col("_nv")), F.lit(1e-30)))
+        .withColumn("_cnv", F.transform(F.col("_nv"), lambda x: x / F.col("_cn")))
         .withColumn("_vec", array_to_vector("_cnv"))
     )
     km = KMeans(
         k=n_cells, seed=seed, featuresCol="_vec", predictionCol="_cell", maxIter=max_iter
     )
     model = km.fit(cand)
-    cand_keep = ["neighbor_id", "_cv", "_cn", "_cnv", "_cell"] + (
+    cand_keep = ["neighbor_id", "_nv", "_cn", "_cnv", "_cell"] + (
         ["_cp"] if pos_col is not None else []
     )
     cand_cells = model.transform(cand).select(*cand_keep)
@@ -572,7 +572,7 @@ def ivf_topk_exact(
     )
     qc = qc.withColumn("_rcell", F.row_number().over(wq)).select(*q_keep)
 
-    raw_sim = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
+    raw_sim = _dot(F.col("_qv"), F.col("_nv")) / (F.col("_qn") * F.col("_cn"))
     pair_ok = F.col("query_id") != F.col("neighbor_id")
     if pos_col is not None:
         pair_ok = pair_ok & ~F.col("_qp").eqNullSafe(F.col("_cp"))
@@ -581,7 +581,7 @@ def ivf_topk_exact(
     pairs1 = (
         probed1.join(cand_cells, "_cell")
         .filter(pair_ok)
-        .select("query_id", "neighbor_id", "_qv", "_qn", "_cv", "_cn")
+        .select("query_id", "neighbor_id", "_qv", "_qn", "_nv", "_cn")
         .withColumn("_s", raw_sim)
     )
     wk = Window.partitionBy("query_id").orderBy(F.desc("_s"), F.asc("neighbor_id"))
@@ -606,7 +606,7 @@ def ivf_topk_exact(
     pairs2 = (
         extra_cells.join(cand_cells, "_cell")
         .filter(pair_ok)
-        .select("query_id", "neighbor_id", "_qv", "_qn", "_cv", "_cn")
+        .select("query_id", "neighbor_id", "_qv", "_qn", "_nv", "_cn")
         .withColumn("_s", raw_sim)
     )
 
@@ -796,19 +796,19 @@ def write_ivf_index(
     cand = _as_double(
         candidates.select(
             F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
+            F.col(vec_col).alias("_nv"),
             *[F.col(c) for c in extra_cols],
         ),
-        "_cv",
+        "_nv",
     )
-    n_rows, fp = _corpus_fingerprint(cand, "neighbor_id", "_cv", extra_cols)
-    cand = cand.withColumn("_vec", array_to_vector("_cv"))
+    n_rows, fp = _corpus_fingerprint(cand, "neighbor_id", "_nv", extra_cols)
+    cand = cand.withColumn("_vec", array_to_vector("_nv"))
     model = KMeans(
         k=n_cells, seed=seed, featuresCol="_vec", predictionCol="cell", maxIter=max_iter
     ).fit(cand)
     (
         model.transform(cand)
-        .select("neighbor_id", F.col("_cv").alias("embedding"), *extra_cols, "cell")
+        .select("neighbor_id", F.col("_nv").alias("embedding"), *extra_cols, "cell")
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)
@@ -937,12 +937,12 @@ def _validate_ivf_index_uncached(
     cand = _as_double(
         candidates.select(
             F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
+            F.col(vec_col).alias("_nv"),
             *[F.col(c) for c in extra_cols],
         ),
-        "_cv",
+        "_nv",
     )
-    n_rows, fp = _corpus_fingerprint(cand, "neighbor_id", "_cv", extra_cols)
+    n_rows, fp = _corpus_fingerprint(cand, "neighbor_id", "_nv", extra_cols)
     return int(meta["n_rows"]) == n_rows and int(meta["fp"]) == fp
 
 

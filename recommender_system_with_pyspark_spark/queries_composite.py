@@ -197,9 +197,7 @@ def cross_validated_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.evaluation import MulticlassClassificationEvaluator
     from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.tuning import ParamGridBuilder
-
-    from .ml.models import _cv
+    from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
     orders = load_table(spark, sf_dir, "orders")
     df = VectorAssembler(
@@ -212,7 +210,9 @@ def cross_validated_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     lr = LogisticRegression(featuresCol="features", labelCol="label")
     grid = ParamGridBuilder().addGrid(lr.regParam, [0.1, 0.01]).build()
     ev = MulticlassClassificationEvaluator(metricName="accuracy", labelCol="label", predictionCol="prediction")
-    model = _cv(lr, ev, grid, seed=1, num_folds=3).fit(df)
+    model = CrossValidator(
+        estimator=lr, estimatorParamMaps=grid, evaluator=ev, numFolds=3, seed=1, parallelism=4
+    ).fit(df)
     acc = ev.evaluate(model.bestModel.transform(df))
     return spark.createDataFrame([(round(acc, 4),)], "accuracy double")
 

@@ -32,6 +32,13 @@ def assembled(labeled):
     return VectorAssembler(inputCols=["x", "y"], outputCol="features").transform(labeled)
 
 
+@pytest.fixture(scope="module")
+def logreg(assembled):
+    """The tuned logistic regression on ``assembled``, fitted once for the
+    tests that only read it."""
+    return MD.logistic_regression(assembled, seed=1)
+
+
 def test_string_indexer_modal_is_zero(spark, sf_tiny):
     from recommender_system_with_pyspark_spark.io import load_table
     from recommender_system_with_pyspark_spark.ml.features import encode_categorical_features
@@ -80,10 +87,49 @@ def test_pca_dim_guard():
         FE.fit_features(pipe, None)
 
 
-def test_logistic_regression_learns(assembled):
-    res = MD.logistic_regression(assembled, seed=1)
-    assert res.metrics["accuracy"] > 0.85
-    assert res.metrics["areaUnderROC"] > 0.85  # true rawPrediction ROC
+def test_logistic_regression_learns(logreg, assembled):
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
+    from pyspark.ml.tuning import ParamGridBuilder, TrainValidationSplit
+
+    assert list(logreg.metrics) == ["accuracy", "areaUnderROC"]
+    assert logreg.metrics["accuracy"] > 0.85
+    assert logreg.metrics["areaUnderROC"] > 0.85  # true rawPrediction ROC
+    # best_params is the grid point that the TVS's own validation metrics pick
+    lr = LogisticRegression()
+    grid = ParamGridBuilder().addGrid(lr.regParam, [0.1, 0.01]).addGrid(lr.maxIter, [50, 100]).build()
+    train, _ = assembled.randomSplit([0.8, 0.2], seed=1)
+    scores = TrainValidationSplit(
+        estimator=lr, estimatorParamMaps=grid,
+        evaluator=MulticlassClassificationEvaluator(metricName="accuracy"), trainRatio=0.8, seed=1,
+    ).fit(train).validationMetrics
+    picked = grid[scores.index(max(scores))]  # the first best, as np.argmax
+    assert logreg.best_params == {p.name: v for p, v in picked.items()}
+
+
+@pytest.mark.parametrize("fit", ["logistic_regression", "fm_regressor_one_point"])
+def test_fit_reads_input_once_and_leaves_no_cache(spark, labeled, fit):
+    """The skeleton caches an uncached input for the call, so the TVS, the
+    refit and every metric read that copy, and it releases the copy."""
+    from pyspark.ml.feature import VectorAssembler
+
+    sc = spark.sparkContext
+    reads = sc.accumulator(0)
+
+    def tick(x):
+        reads.add(1)
+        return x
+
+    counted = VectorAssembler(inputCols=["x", "y"], outputCol="features").transform(
+        labeled.withColumn("x", F.udf(tick, "double")("x"))
+    )
+    persisted = len(sc._jsc.getPersistentRDDs())
+    if fit == "logistic_regression":
+        MD.logistic_regression(counted, seed=1)
+    else:
+        MD.fm_regressor(counted, step_sizes=(0.1,), factor_sizes=(1,))
+    assert reads.value == labeled.count()
+    assert len(sc._jsc.getPersistentRDDs()) == persisted
 
 
 def test_compat_hard_roc_quirk(spark):
@@ -128,9 +174,25 @@ def test_decision_tree_reference_grid_degenerates(assembled):
 
 
 def test_fm_regressor_runs(assembled):
+    from pyspark.ml.evaluation import RegressionEvaluator
+    from pyspark.ml.regression import FMRegressor
+    from pyspark.ml.tuning import ParamGridBuilder, TrainValidationSplit
+
     df = assembled.withColumnRenamed("label", "target")
     res = MD.fm_regressor(df, label_col="target", step_sizes=(0.1,), factor_sizes=(1,))
     assert res.metrics["rmse"] < 0.6
+    assert res.best_params == {"stepSize": 0.1, "factorSize": 1}
+    # the one-point grid is fitted directly: the same model, so the same
+    # metrics, as a TrainValidationSplit over that point
+    fm = FMRegressor(labelCol="target", seed=1)
+    grid = ParamGridBuilder().addGrid(fm.stepSize, [0.1]).addGrid(fm.factorSize, [1]).build()
+    train, test = df.randomSplit([0.8, 0.2], seed=1)
+    ev = RegressionEvaluator(labelCol="target")
+    best = TrainValidationSplit(
+        estimator=fm, estimatorParamMaps=grid, evaluator=ev, trainRatio=0.8, seed=1
+    ).fit(train).bestModel
+    pred = best.transform(test)
+    assert res.metrics == {m: ev.setMetricName(m).evaluate(pred) for m in ("rmse", "r2")}
 
 
 def test_als_prediction_and_topk(spark, sf_tiny):
@@ -139,6 +201,13 @@ def test_als_prediction_and_topk(spark, sf_tiny):
     ratings = implicit_ratings(spark, sf_tiny)
     res = MD.als_prediction(ratings, ranks=(4,), reg_params=(0.1,), max_iter=5, tune=False)
     assert res.metrics["rmse"] < 2.0
+    # both splits come from one cached copy, so a caller's cache changes nothing
+    ratings.cache()
+    try:
+        again = MD.als_prediction(ratings, ranks=(4,), reg_params=(0.1,), max_iter=5, tune=False)
+    finally:
+        ratings.unpersist()
+    assert again.metrics == res.metrics
     recs = MD.recommend_for_all_users(res.model, k=4)
     counts = recs.groupBy("user_id").count().select("count").distinct().collect()
     assert [r["count"] for r in counts] == [4]
@@ -223,9 +292,8 @@ def test_seeded_als_factors_are_deterministic(spark):
         df.unpersist()
 
 
-def test_metrics_report_shape(assembled):
-    res = MD.logistic_regression(assembled, seed=1)
-    report = MD.metrics_report({"logreg": res})
+def test_metrics_report_shape(logreg):
+    report = MD.metrics_report({"logreg": logreg})
     row = report.first()
     assert row["model"] == "logreg"
     assert 0.0 <= row["accuracy"] <= 1.0
@@ -248,13 +316,12 @@ def test_chi_square_detects_dependence(spark):
     assert got["indep"] > 0.1  # independent
 
 
-def test_model_save_load(tmp_path, assembled):
+def test_model_save_load(tmp_path, logreg):
     from pyspark.ml.classification import LogisticRegressionModel
 
     from recommender_system_with_pyspark_spark.io import save_model
 
-    res = MD.logistic_regression(assembled, seed=1)
     path = str(tmp_path / "lr_model")
-    save_model(res.model, path)
+    save_model(logreg.model, path)
     loaded = LogisticRegressionModel.load(path)
-    assert loaded.numFeatures == res.model.numFeatures
+    assert loaded.numFeatures == logreg.model.numFeatures

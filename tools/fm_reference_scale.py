@@ -180,27 +180,7 @@ def main() -> None:
         res = fm_regressor(feats, "features", "label")
     t_fit = time.time() - t1
 
-    metrics = (
-        {"accuracy": round(res.metrics["accuracy"], 4),
-         "areaUnderROC": round(res.metrics["areaUnderROC"], 4)}
-        if is_classification
-        else {"rmse": round(res.metrics["rmse"], 4), "r2": round(res.metrics["r2"], 4)}
-    )
-    if args.task in ("dectree", "randforest"):
-        best_params = {
-            "maxDepth": res.model.getOrDefault("maxDepth"),
-            "minInfoGain": res.model.getOrDefault("minInfoGain"),
-        }
-    elif args.task == "logreg":
-        best_params = {
-            "regParam": res.model.getOrDefault("regParam"),
-            "maxIter": res.model.getOrDefault("maxIter"),
-        }
-    else:
-        best_params = {
-            "stepSize": res.model.getOrDefault("stepSize"),
-            "factorSize": res.model.getOrDefault("factorSize"),
-        }
+    metrics = {name: round(value, 4) for name, value in res.metrics.items()}
     anchors = {"regressor": 121.99, "classifier": 283.68,
                "dectree": 74.91, "randforest": 61.52, "logreg": 35.81}
     out = {
@@ -212,7 +192,7 @@ def main() -> None:
         "rows": rows,
         "onehot_dim": n_users + n_items,
         **metrics,
-        "best_params": best_params,
+        "best_params": res.best_params,
         "prep_sec": round(t_prep, 1),
         "fit_sec": round(t_fit, 1),
         "total_min": round((time.time() - t0) / 60, 2),
