@@ -98,7 +98,8 @@ def clean_complete_database(
     3. Family → 'No family' (`:107`)
     4. mean-fill ComAgeRec/LanguageEase (`:110-111`) — each with its OWN
        mean (v1 bug `functions.py:97` not reproduced)
-    5. mode-fill categorical columns (`:114-124`)
+    5. mode-fill categorical columns (`:114-124`); steps 4 and 5 are one
+       aggregate action
     6. IQR outlier removal, k=1, sequential per column, YearPublished>1970
        (`:369-393`, PDF p.10)
     7. zero-variance column prune (`:133-138`)
@@ -107,8 +108,11 @@ def clean_complete_database(
     df = C.positive_filter(df, [c for c in POSITIVE_COLS if c in df.columns])
     if "Family" in df.columns:
         df = C.fill_const(df, {"Family": "No family"})
-    df = C.fill_mean(df, [c for c in MEAN_FILL_COLS if c in df.columns])
-    df = C.fill_mode(df, [c for c in MODE_FILL_COLS if c in df.columns])
+    df = C.fill_mean_mode(
+        df,
+        [c for c in MEAN_FILL_COLS if c in df.columns],
+        [c for c in MODE_FILL_COLS if c in df.columns],
+    )
     if "YearPublished" in df.columns:
         df = df.filter(F.col("YearPublished") > year_floor)
     numeric = [

@@ -1,7 +1,7 @@
 """Model zoo + tuning/eval harness (SURVEY §2.8 M9-M21, §7 M4).
 
 The reference's six model functions (`bgrfunctions.py:179-366`) share one
-skeleton: randomSplit → TrainValidationSplit over a 2×2 grid → evaluate →
+skeleton: randomSplit → train-validation split over a 2×2 grid → evaluate →
 save. :func:`tuned_fit` is that skeleton, written once; each model
 function only builds its estimator, grid and evaluators. Differences from
 the reference are deliberate and documented:
@@ -42,44 +42,51 @@ class FitResult:
     id_maps: dict = field(default_factory=dict)
 
 
-def tuned_fit(estimator: Estimator, df: DataFrame, grid, evaluators: dict, seed: int) -> FitResult:
-    """M9 + M17/M18 — seeded 80/20 split → TrainValidationSplit
-    (trainRatio=0.8, `bgrfunctions.py:191`) over ``grid`` → every
-    evaluator on the held-out predictions.
+GRID_PARALLELISM = 4
+"""Grid points fitted at once by :func:`tuned_fit`; :func:`als_prediction`
+divides the session's cores by the same number to size the grid fits'
+ALS blocks. Measured on 4 cores (perfbench's als_grid corpus, one warm
+process): 4 and 2 run the grid in 7.3–9.4 s, 1 in 10.3–12.5 s."""
+
+
+def tuned_fit(estimator: Estimator, df: DataFrame, grid, evaluators: dict, seed: int,
+              grid_params: dict | None = None) -> FitResult:
+    """M9 + M17/M18 — seeded 80/20 split → a train-validation grid search
+    (trainRatio=0.8, `bgrfunctions.py:191`) over ``grid`` → refit of the
+    picked point on the train split → every evaluator on the held-out
+    predictions.
 
     ``evaluators`` is an ordered ``{metric name: evaluator}``: the first
     one selects the grid point, and the dict order is the order of
     ``FitResult.metrics``. ``best_params`` is the chosen grid point by
-    param name. A one-point grid is fitted on the train split directly,
-    which is the model the TVS refit would return. Grid fits run in
-    parallel (the reference fits serially).
+    param name. A one-point grid is fitted on the train split directly.
+
+    The grid search is PySpark's ``TrainValidationSplit`` written out (the
+    same inner split, evaluation, pick and refit) with one addition:
+    ``grid_params`` apply to the grid-phase fits only, never to the refit,
+    so they can move the scores but not the model fitted for a given
+    pick. Up to :data:`GRID_PARALLELISM` grid points fit at once
+    (the reference fits serially), so a caller can give each of them its
+    share of the cores; their jobs run in the caller's job group.
 
     An uncached input is cached for the call and released before it
-    returns, so it is read once: the TVS's own split, the refit and every
-    metric read the cache, and both splits come from the same rows in the
-    same partitions. A caller's cache is used as it is and left alone.
+    returns, so it is read once: the grid search's own split, the refit and
+    every metric read the cache, and both splits come from the same rows in
+    the same partitions. A caller's cache is used as it is and left alone.
     The predictions are not cached: a cached plan skips AQE's final-stage
     coalescing, which would change the order of the metric sums."""
-    import numpy as np
     from pyspark import StorageLevel
-    from pyspark.ml.tuning import TrainValidationSplit
 
     owned = df.storageLevel == StorageLevel.NONE
     if owned:
         df.cache()
     try:
         train, test = df.randomSplit([0.8, 0.2], seed=seed)
-        if len(grid) == 1:
-            point, best = grid[0], estimator.fit(train, grid[0])
-        else:
-            select = next(iter(evaluators.values()))
-            tvs = TrainValidationSplit(
-                estimator=estimator, estimatorParamMaps=grid, evaluator=select,
-                trainRatio=0.8, seed=seed, parallelism=4,
-            ).fit(train)
-            # the pick TrainValidationSplit makes
-            pick = np.argmax if select.isLargerBetter() else np.argmin
-            point, best = grid[int(pick(tvs.validationMetrics))], tvs.bestModel
+        point = grid[0]
+        if len(grid) > 1:
+            point = _grid_search(estimator, train, grid, next(iter(evaluators.values())), seed,
+                                 grid_params or {})
+        best = estimator.fit(train, point)
         pred = best.transform(test)
         metrics = {name: ev.evaluate(pred) for name, ev in evaluators.items()}
     finally:
@@ -91,6 +98,46 @@ def tuned_fit(estimator: Estimator, df: DataFrame, grid, evaluators: dict, seed:
         best_params={param.name: value for param, value in point.items()},
         predictions=pred,
     )
+
+
+def _grid_search(estimator: Estimator, train: DataFrame, grid, select, seed: int,
+                 grid_params: dict) -> dict:
+    """The pick of MLlib's ``TrainValidationSplit`` at ``trainRatio=0.8``
+    and ``seed`` over ``train``, with ``grid_params`` added to every grid
+    fit: rows with ``rand(seed) >= 0.8`` are the validation part, both
+    parts are cached for the search, each point is fitted on the rest and
+    scored by ``select``, and the first best score wins."""
+    from multiprocessing.pool import ThreadPool
+
+    import numpy as np
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+    from pyspark.util import inheritable_thread_target
+
+    split = train.select("*", F.rand(seed).alias("_grid_rand"))
+    held_out = split["_grid_rand"] >= 0.8
+    parts = split.filter(~held_out), split.filter(held_out)
+    for part in parts:
+        part.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    try:
+        fit_part, validation = parts
+        models = estimator.fitMultiple(fit_part, [{**point, **grid_params} for point in grid])
+
+        # captures the caller's job group here; each pool thread applies it
+        @inheritable_thread_target(train.sparkSession)
+        def fit_next(_):
+            i, model = next(models)
+            return i, select.evaluate(model.transform(validation, grid[i]))
+
+        scores = [0.0] * len(grid)
+        with ThreadPool(min(GRID_PARALLELISM, len(grid))) as pool:
+            for i, score in pool.imap_unordered(fit_next, range(len(grid))):
+                scores[i] = score
+    finally:
+        for part in parts:
+            part.unpersist()
+    pick = np.argmax if select.isLargerBetter() else np.argmin
+    return grid[int(pick(scores))]
 
 
 def _grid(*axes) -> list:
@@ -119,8 +166,10 @@ def _classification_evaluators(label_col: str, compat_hard_roc: bool) -> dict:
         "accuracy": MulticlassClassificationEvaluator(
             metricName="accuracy", labelCol=label_col, predictionCol="prediction"
         ),
+        # numBins=0: the exact curve. Binned, it is downsampled per partition,
+        # so the AUC would move with the predictions' partitioning
         "areaUnderROC": BinaryClassificationEvaluator(
-            labelCol=label_col,
+            labelCol=label_col, numBins=0,
             # reference quirk M21: rawPredictionCol='prediction' → ROC ≈ 0.5
             rawPredictionCol="prediction" if compat_hard_roc else "rawPrediction",
         ),
@@ -138,8 +187,10 @@ def als_estimator(spark, **params):
     of its ratings; under a popularity head that is nearly every block, so
     shuffle and serialization grow with the block count, and 10-task
     stages run in three waves on 4 cores. Seeded factors are
-    bit-reproducible for a fixed core count but differ across core counts
-    (the block layout seeds the factor init)."""
+    bit-reproducible for a fixed block count but differ across block
+    counts (the block layout seeds the factor init). Fits that share the
+    cores with others pass smaller counts per fit, as
+    :func:`als_prediction`'s grid fits do."""
     from pyspark.ml.recommendation import ALS
 
     blocks = spark.sparkContext.defaultParallelism
@@ -167,10 +218,14 @@ def als_prediction(
     Scale: every ALS iteration shuffles user/item factor blocks, and ALS
     partitions by its own block counts, not by
     ``spark.sql.shuffle.partitions``. :func:`als_estimator` sizes them to
-    the session's cores (one wave of tasks, fewest factor copies), which
-    serves the TVS grid fits, the refit and ``tune=False`` alike; rank is
-    the other lever. checkpointInterval=10 truncates the 20-iteration
-    lineage."""
+    the session's cores (one wave of tasks, fewest factor copies) for the
+    refit and ``tune=False``. The grid fits run :data:`GRID_PARALLELISM`
+    at a time, so each gets ``cores // min(GRID_PARALLELISM, len(grid))``
+    blocks (at least 1): together they still fill the cores in one wave.
+    The grid fits' validation RMSEs depend on that layout; the returned
+    model does not, it is the same full-width refit of the picked point.
+    Rank is the other lever. checkpointInterval=10 truncates the
+    20-iteration lineage."""
     # checkpointInterval is a silent no-op without a checkpoint dir, and at
     # maxIter=20 the factor RDD lineage is deep enough to StackOverflow task
     # serialization (hit at 2M rows already). Set one if the session has
@@ -192,7 +247,11 @@ def als_prediction(
         maxIter=max_iter, seed=seed, checkpointInterval=10,
     )
     grid = _grid((als.rank, ranks), (als.regParam, reg_params))
-    res = tuned_fit(als, ratings, grid if tune else grid[:1], _regression_evaluators(rating_col), seed)
+    if not tune:
+        grid = grid[:1]
+    share = max(1, als.getNumUserBlocks() // min(GRID_PARALLELISM, len(grid)))
+    res = tuned_fit(als, ratings, grid, _regression_evaluators(rating_col), seed,
+                    grid_params={als.numUserBlocks: share, als.numItemBlocks: share})
     # translate model output back to the caller's original (long) ids —
     # restore_ids is a no-op in the passthrough case
     res.predictions = restore_ids(

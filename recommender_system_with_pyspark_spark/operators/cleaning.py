@@ -8,7 +8,8 @@ and shuffle-free unless noted.
 
 Scale notes (100 TB):
 - Imputation fills (mean/mode) compute one small aggregate and attach it as
-  a literal — one extra job over the column, no shuffle of the fact table.
+  a literal — one extra aggregate over all the filled columns, no shuffle
+  of the fact table.
 - ``iqr_outlier_filter`` uses ``approxQuantile`` (single pass,
   Greenwald-Khanna sketch) by default; ``exact=True`` switches to the exact
   ``percentile`` aggregate for oracle-testable semantics.
@@ -64,36 +65,37 @@ def fill_const(df: DataFrame, values: Mapping[str, object]) -> DataFrame:
 
 
 def fill_mean(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """P10 — mean-impute nulls (`bgrfunctions.py:110-111`).
-
-    One aggregate job computes all means at once (not one job per column —
-    the v1 reference bug of filling LanguageEase with ComAgeRec's mean,
-    `functions.py:97`, is structurally impossible here).
-    """
-    if not columns:
-        return df
-    means = df.agg(*[F.avg(c).alias(c) for c in columns]).first()
-    return df.na.fill({c: means[c] for c in columns if means[c] is not None})
+    """P10 — mean-impute nulls (`bgrfunctions.py:110-111`); see
+    :func:`fill_mean_mode`."""
+    return fill_mean_mode(df, columns, ())
 
 
 def fill_mode(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """P11 — most-frequent-value imputation (`bgrfunctions.py:27-32,114-124`).
+    """P11 — most-frequent-value imputation (`bgrfunctions.py:27-32,114-124`);
+    see :func:`fill_mean_mode`."""
+    return fill_mean_mode(df, (), columns)
 
-    Mode per column = groupBy count + deterministic tie-break (count desc,
-    value asc). Each mode is one hash-aggregate job over a single column;
-    null rows are excluded from the vote.
+
+def fill_mean_mode(
+    df: DataFrame, mean_columns: Sequence[str], mode_columns: Sequence[str]
+) -> DataFrame:
+    """P10 + P11 — fill the nulls of ``mean_columns`` with their means and
+    those of ``mode_columns`` with their most frequent values.
+
+    One aggregate action computes every fill at once (not one per column —
+    the v1 reference bug of filling LanguageEase with ComAgeRec's mean,
+    `functions.py:97`, is structurally impossible here). Null rows are
+    excluded from both; a mode tie goes to the lowest value
+    (``mode(deterministic=True)``), which is the count desc, value asc
+    rule. A column with no non-null value is left as it is. The two lists
+    must not overlap: every fill is computed on ``df`` as given.
     """
-    fills: dict[str, object] = {}
-    for c in columns:
-        row = (
-            df.filter(F.col(c).isNotNull())
-            .groupBy(c)
-            .count()
-            .orderBy(F.desc("count"), F.asc(c))
-            .first()
-        )
-        if row is not None:
-            fills[c] = row[0]
+    aggs = [F.avg(c).alias(c) for c in mean_columns]
+    aggs += [F.mode(c, deterministic=True).alias(c) for c in mode_columns]
+    if not aggs:
+        return df
+    fills = df.agg(*aggs).first().asDict()
+    fills = {c: v for c, v in fills.items() if v is not None}
     return df.na.fill(fills) if fills else df
 
 

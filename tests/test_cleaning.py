@@ -54,6 +54,38 @@ def test_fill_mode_tie_break(spark):
     assert out.filter(F.col("s") == "a").count() == 3
 
 
+def test_fill_mean_mode_is_one_aggregate_with_per_column_rules(spark):
+    """Means and modes come from one aggregate action (as many jobs as one
+    plain aggregate), and each column gets the fill its own rule gives
+    alone: its mean, or its most frequent value with ties to the lowest,
+    nulls excluded."""
+    df = _df(
+        spark,
+        [("b", 1.0, 5), ("b", None, 5), ("a", 3.0, None), ("a", None, 7), (None, 5.0, 7), ("c", None, None)],
+        "s string, x double, n int",
+    )
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            result = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, one_aggregate = jobs("fill-test-avg", lambda: df.agg(F.avg("x")).first())
+    out, fill_jobs = jobs("fill-test-fill", lambda: C.fill_mean_mode(df, ["x"], ["s", "n"]))
+    assert fill_jobs == one_aggregate
+    got = sorted(out.collect(), key=lambda r: (r.s, r.x, r.n))
+    assert got == sorted(C.fill_mode(C.fill_mode(C.fill_mean(df, ["x"]), ["s"]), ["n"]).collect(),
+                         key=lambda r: (r.s, r.x, r.n))
+    assert out.filter(F.col("s") == "a").count() == 3  # a/b tie at 2 → 'a'
+    assert out.filter(F.col("n") == 5).count() == 4  # 5/7 tie at 2 → 5
+    assert out.filter(F.col("x") == 3.0).count() == 4  # mean of 1, 3, 5
+
+
 def test_positive_filter(spark):
     df = _df(spark, [(1, 5), (0, 5), (2, 0), (3, 3)], "x int, y int")
     assert C.positive_filter(df, ["x", "y"]).count() == 2

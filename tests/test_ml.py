@@ -109,8 +109,9 @@ def test_logistic_regression_learns(logreg, assembled):
 
 @pytest.mark.parametrize("fit", ["logistic_regression", "fm_regressor_one_point"])
 def test_fit_reads_input_once_and_leaves_no_cache(spark, labeled, fit):
-    """The skeleton caches an uncached input for the call, so the TVS, the
-    refit and every metric read that copy, and it releases the copy."""
+    """The skeleton caches an uncached input for the call, so the grid
+    search, the refit and every metric read that copy, and it releases the
+    copy."""
     from pyspark.ml.feature import VectorAssembler
 
     sc = spark.sparkContext
@@ -157,6 +158,37 @@ def test_compat_hard_roc_quirk(spark):
     assert abs(quirk.metrics["areaUnderROC"] - 0.5) < 0.05  # pinned to chance
     assert good.metrics["areaUnderROC"] > quirk.metrics["areaUnderROC"] + 0.03
     assert quirk.metrics["accuracy"] > 0.85  # majority-rate accuracy, like the reference
+
+
+def test_area_under_roc_is_exact_whatever_the_partitioning(spark):
+    """The ROC is the exact curve (``numBins=0``): a binned one is
+    downsampled per partition, so its AUC moved with the predictions'
+    partitioning."""
+    import random
+
+    random.seed(3)
+    rows = []
+    for _ in range(5_000):
+        score = random.random()
+        rows.append((score, 1.0 if score + random.random() > 1.0 else 0.0))
+    pred = spark.createDataFrame(rows, "rawPrediction double, label double")
+    auc = MD._classification_evaluators("label", compat_hard_roc=False)["areaUnderROC"]
+    three, seven = (auc.evaluate(pred.repartition(n)) for n in (3, 7))
+    assert abs(three - seven) < 1e-12
+
+
+def test_cross_validated_logreg_reports_the_cv_estimate(spark, sf_tiny, monkeypatch):
+    """The row is the best grid point's mean held-out accuracy, not the
+    best model's accuracy on the rows it was fitted on."""
+    from pyspark.ml.tuning import CrossValidator
+
+    from recommender_system_with_pyspark_spark.queries_composite import cross_validated_logreg
+
+    fitted = []
+    fit = CrossValidator._fit
+    monkeypatch.setattr(CrossValidator, "_fit", lambda self, df: fitted.append(fit(self, df)) or fitted[-1])
+    row = cross_validated_logreg(spark, sf_tiny).first()
+    assert row["accuracy"] == round(max(fitted[0].avgMetrics), 4)
 
 
 def test_decision_tree_and_forest(assembled):
@@ -244,9 +276,12 @@ def test_als_prediction_long_ids_recommend_input_ids(spark):
     assert {r["item_id"] for r in got} <= items
 
 
-def test_als_blocks_sized_to_cores(spark, sf_tiny):
+def test_als_blocks_sized_to_cores(spark, sf_tiny, monkeypatch):
     """Every ALS is built by ``als_estimator``: one user/item block per
-    session core, whether fitted alone or as the TVS refit."""
+    session core when fitted alone or as the tuned refit. The grid fits run
+    ``GRID_PARALLELISM`` at a time, so each gets its share of the cores."""
+    from pyspark.ml.recommendation import ALS
+
     from recommender_system_with_pyspark_spark.flagship import implicit_ratings
 
     cores = spark.sparkContext.defaultParallelism
@@ -254,6 +289,14 @@ def test_als_blocks_sized_to_cores(spark, sf_tiny):
     assert (als.getNumUserBlocks(), als.getNumItemBlocks()) == (cores, cores)
     assert als.getColdStartStrategy() == "drop"
 
+    grid_maps = []
+    fit_multiple = ALS.fitMultiple
+
+    def spy(self, dataset, param_maps):
+        grid_maps.extend({p.name: v for p, v in m.items()} for m in param_maps)
+        return fit_multiple(self, dataset, param_maps)
+
+    monkeypatch.setattr(ALS, "fitMultiple", spy)
     ratings = implicit_ratings(spark, sf_tiny).cache()
     try:
         for tune in (False, True):
@@ -264,6 +307,75 @@ def test_als_blocks_sized_to_cores(spark, sf_tiny):
             assert (est.getNumUserBlocks(), est.getNumItemBlocks()) == (cores, cores), tune
     finally:
         ratings.unpersist()
+    share = max(1, cores // min(MD.GRID_PARALLELISM, 2))
+    assert [(m["rank"], m["numUserBlocks"], m["numItemBlocks"]) for m in grid_maps] == [
+        (2, share, share), (4, share, share)
+    ]
+
+
+def _factor_hashes(model) -> list[int]:
+    # bit_xor of per-row hashes: order-free and, unlike sum, no ANSI overflow
+    return [
+        f.agg(F.bit_xor(F.xxhash64("id", "features"))).first()[0]
+        for f in (model.userFactors, model.itemFactors)
+    ]
+
+
+def test_tuned_als_is_the_full_width_refit_of_its_pick(spark):
+    """The grid fits' block share changes only the validation scores: the
+    returned model is bit for bit the full-width fit of the picked point on
+    the train split."""
+    from recommender_system_with_pyspark_spark.domain.golden import synthetic_ratings
+
+    df = synthetic_ratings(spark, 5_000, 200, 80).cache()
+    try:
+        res = MD.als_prediction(df, ranks=(4, 6), reg_params=(0.1, 0.01), max_iter=4, seed=1)
+        als = MD.als_estimator(
+            spark, userCol="user_id", itemCol="item_id", ratingCol="rating",
+            maxIter=4, seed=1, checkpointInterval=10,
+        )
+        train, _ = df.randomSplit([0.8, 0.2], seed=1)
+        point = {als.rank: res.best_params["rank"], als.regParam: res.best_params["regParam"]}
+        assert _factor_hashes(res.model) == _factor_hashes(als.fit(train, point))
+    finally:
+        df.unpersist()
+
+
+def test_grid_fits_run_in_the_callers_job_group(spark, assembled):
+    """The grid points are fitted and scored on pool threads; every job they
+    run carries the caller's job group, so a tracer charges it to the
+    caller's span."""
+    import threading
+
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    accuracy = MulticlassClassificationEvaluator(metricName="accuracy")
+    scored = []
+
+    class Spy:
+        def isLargerBetter(self):
+            return True
+
+        def evaluate(self, df):
+            on_main = threading.current_thread() is threading.main_thread()
+            scored.append((on_main, sc.getLocalProperty("spark.jobGroup.id")))
+            return accuracy.evaluate(df)
+
+    lr = LogisticRegression()
+    grid = MD._grid((lr.regParam, [0.1, 0.01]), (lr.maxIter, [5, 10]))
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("grid-fit-test", "grid-fit-test")
+    try:
+        MD.tuned_fit(lr, assembled, grid, {"accuracy": Spy()}, seed=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup()) <= ungrouped
+    assert tracker.getJobIdsForGroup("grid-fit-test")
+    assert sorted(scored) == [(False, "grid-fit-test")] * 4 + [(True, "grid-fit-test")]
 
 
 def test_seeded_als_factors_are_deterministic(spark):
@@ -278,11 +390,7 @@ def test_seeded_als_factors_are_deterministic(spark):
                 spark, rank=10, maxIter=5, seed=1,
                 userCol="user_id", itemCol="item_id", ratingCol="rating",
             ).fit(frame)
-            # bit_xor of per-row hashes: order-free and, unlike sum, no ANSI overflow
-            return [
-                f.agg(F.bit_xor(F.xxhash64("id", "features"))).first()[0]
-                for f in (model.userFactors, model.itemFactors)
-            ]
+            return _factor_hashes(model)
 
         first = fit(df)
         assert fit(df) == first
