@@ -59,18 +59,15 @@ HEADLINE = [
     "hybrid_search_rrf",            # BM25 + embedding cosine fused by RRF
     "cms_user_counts",              # mergeable Count-Min sketch build + estimate
     "negative_sample_interactions", # md5-draw negatives over dense item index
-    # round-9 surface (multimodal_jpeg_progressive_decode stays OUT of the
-    # headline like the r8 color/420 codec entries — a 12 s pure-Python
-    # codec loop would dominate the suite total; its scale evidence lives
-    # in SCALING.md round 9 + the oracle entry)
+    # round-9 surface
     "stream_decayed_features",      # NATIVE update-mode streaming decay agg (was Python state)
     "training_pipeline_e2e",        # quality->dedup->decontaminate->split->BPE->accounting
     "bpe_train_batched_merges",     # real-vocab batched BPE training (2 corpus passes)
-    # round-10 surface (hard_negative_mining_ivf stays OUT of the headline
-    # like the r8/r9 codec entries: its ~10 s is MLlib KMeans index-build
-    # overhead that amortizes across queries at real scale but would
-    # dominate a toy-scale suite total; its scale evidence lives in
-    # SCALING.md round 10 + the hash-checked oracle entry)
+    # round-10 surface (hard_negative_mining_ivf stays OUT of the headline:
+    # its ~10 s is MLlib KMeans index-build overhead that amortizes across
+    # queries at real scale but would dominate a toy-scale suite total; its
+    # scale evidence lives in SCALING.md round 10 + the hash-checked oracle
+    # entry)
     "multimodal_mp3_header_audit",  # MPEG-1 Layer III frame-header census
     # round-11 surface (hard_negative_mining_indexed_full stays OUT of the
     # headline for the same reason as _ivf: its one-time index build is

@@ -2,15 +2,11 @@
 
 Media (image/audio/video) is modeled as opaque ``binary`` columns plus a
 typed metadata struct. The Spark-side plumbing (schema, partitioning, Arrow
-batch shape, UDF signatures) is real and tested, and four container
+batch shape, UDF signatures) is real and tested, and three container
 formats decode FOR REAL with no external library: uncompressed 24-bit BMP
 (pure struct/numpy header + raster parse, VERDICT r6 #6), non-interlaced
 8-bit RGB PNG (stdlib zlib inflate + numpy per-row unfilter over all five
-filter types, VERDICT r7 #6), JPEG (full T.81 chain in pure numpy —
-baseline grayscale, 4:4:4 color, 4:2:0 chroma-subsampled,
-restart-interval/DRI streams (round 8), and PROGRESSIVE SOF2 with
-spectral selection + successive approximation (round 9);
-``operators/jpegcodec.py``), and PCM WAV (stdlib ``wave``). MP3 frame
+filter types, VERDICT r7 #6), and PCM WAV (stdlib ``wave``). MP3 frame
 HEADERS parse for real too (``parse_mp3_headers`` /
 ``mp3_header_audit``, round 10 — duration/bitrate/channel census, the
 corpus audit that precedes transcoding); only MP3 *synthesis* (the
@@ -277,33 +273,20 @@ def decode_png(data: bytes) -> "object":
 
 
 def decode_image(data: bytes) -> "object":
-    """Dispatching image decode — three formats decode FOR REAL with no
-    codec library: BMP (``decode_bmp``), non-interlaced 8-bit RGB PNG
-    (``decode_png``), and JPEG (``jpegcodec.decode_jpeg`` — the full
-    T.81 chain: baseline grayscale, 4:4:4 color, chroma-subsampled
-    4:2:2/4:2:0, AND progressive SOF2 with spectral selection +
-    successive approximation via scan accumulation; gray rasters expand
-    to (h, w, 3) so downstream channel features are format-agnostic).
-    Video codecs remain STUBBED — real deployments plug in PIL/libvips/
-    ffmpeg here (the container has no compressed-media libraries)."""
-    import numpy as np
-
+    """Dispatching image decode — two formats decode FOR REAL with no
+    codec library: BMP (``decode_bmp``) and non-interlaced 8-bit RGB PNG
+    (``decode_png``). Any other container raises
+    ``NotImplementedError``; ``extract_image_features`` turns that into a
+    ``decoded=false`` row. Real deployments plug in PIL/libvips/ffmpeg
+    here (the container has no compressed-media libraries)."""
     if data[:2] == b"BM":
         return decode_bmp(data)
     if data[: len(_PNG_SIG)] == _PNG_SIG:
         return decode_png(data)
-    if data[:2] == b"\xff\xd8":
-        from .jpegcodec import decode_jpeg
-
-        px = decode_jpeg(data)  # baseline AND progressive streams
-        if px.ndim == 2:  # grayscale: replicate so channel features align
-            return np.repeat(px[:, :, None], 3, axis=2)
-        return px
     raise NotImplementedError(
-        "only BMP, 8-bit RGB PNG, and JPEG (baseline grayscale/4:4:4/"
-        "4:2:2/4:2:0 + progressive) decode in this container; other "
-        "formats require a codec library — use extract_byte_features "
-        "for the plumbing-level path"
+        "only BMP and 8-bit RGB PNG decode in this container (JPEG and "
+        "other formats require a codec library) — use "
+        "extract_byte_features for the plumbing-level path"
     )
 
 
@@ -363,13 +346,11 @@ def extract_image_features(df: DataFrame, round_to: int = 6) -> DataFrame:
             )
 
     # Layout contract (round 14, VERDICT r13 #1): the extractor inherits
-    # its input's partitioning instead of spreading it — every expensive
-    # synthetic feed (the JPEG family, MP3) spreads BEFORE its own encode
-    # stage, so the decode here rides that layout, while the cheap
-    # container paths (BMP) must NOT pay a probe+shuffle that costs more
-    # than the decode (r13 regressed multimodal_image_decode 0.54× doing
-    # exactly that). A raw single-split media table of an expensive codec
-    # is the caller's layout decision (spread_small_input at the scan).
+    # its input's partitioning instead of spreading it — the BMP and PNG
+    # decodes are cheap, and a probe+shuffle costs more than they do (r13
+    # regressed multimodal_image_decode 0.54× doing exactly that). A raw
+    # single-split media table of an expensive codec is the caller's
+    # layout decision (spread_small_input at the scan).
     return df.select("media_id", "media").mapInPandas(batches, IMAGE_FEATURE_SCHEMA)
 
 
@@ -504,175 +485,6 @@ def text_to_png_media(
     # no spread: PNG encode is C-zlib deflate over a tiny raster — same
     # cheap-container rule as text_to_bmp_media (VERDICT r13 #1)
     return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        batches, "media_id long, media binary"
-    )
-
-
-def text_to_jpeg_media(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    width: int = 64,
-    height: int = 32,
-) -> DataFrame:
-    """Deterministic JPEG-fixture synthesizer: cycle each document's UTF-8
-    bytes into one gray value per 8×8 block (row-major), render the
-    constant-block raster, and encode it as a REAL baseline grayscale JPEG
-    (``jpegcodec.encode_jpeg_gray`` — FDCT, quantization, zigzag, Huffman).
-    Constant blocks make the LOSSY codec exactly predictable: only the DC
-    coefficient survives, so the decoded block value is
-    ``clamp(2·round((v−128)/2) + 128)`` under Q₀₀=16 — the closed form the
-    ``multimodal_jpeg_decode`` DuckDB oracle recomputes from the text."""
-    import numpy as np
-
-    from .jpegcodec import encode_jpeg_gray
-
-    if width % 8 or height % 8:
-        raise ValueError("width/height must be multiples of 8")
-    n_blocks = (height // 8) * (width // 8)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                arr = np.frombuffer(str(text).encode("utf-8"), dtype=np.uint8)
-                vals = np.resize(arr, n_blocks).reshape(height // 8, width // 8)
-                raster = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                out.append((mid, encode_jpeg_gray(raster)))
-            yield pd.DataFrame(out, columns=["media_id", "media"])
-
-    return spread_small_input(
-        df.select(F.col(id_col), F.col(text_col)), id_col
-    ).mapInPandas(
-        batches, "media_id long, media binary"
-    )
-
-
-def text_to_jpeg_progressive_media(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    width: int = 40,
-    height: int = 24,
-) -> DataFrame:
-    """PROGRESSIVE-JPEG twin of ``text_to_jpeg_media``: the same cycled-
-    text constant blocks encoded as a real SOF2 progressive stream
-    (``jpegcodec.encode_jpeg_progressive`` — DC at Al=1 + refinement,
-    AC spectral bands at Al=2 refined twice). Constant blocks keep the
-    closed form: progressive scan accumulation reconstructs the identical
-    DC-only coefficient array baseline would transmit, so the decoded
-    block value stays ``clamp(2·round((v−128)/2) + 128)`` and the same
-    DuckDB oracle shape applies."""
-    import numpy as np
-
-    from .jpegcodec import encode_jpeg_progressive
-
-    if width % 8 or height % 8:
-        raise ValueError("width/height must be multiples of 8")
-    n_blocks = (height // 8) * (width // 8)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                arr = np.frombuffer(str(text).encode("utf-8"), dtype=np.uint8)
-                vals = np.resize(arr, n_blocks).reshape(height // 8, width // 8)
-                raster = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                out.append((mid, encode_jpeg_progressive(raster)))
-            yield pd.DataFrame(out, columns=["media_id", "media"])
-
-    return spread_small_input(
-        df.select(F.col(id_col), F.col(text_col)), id_col
-    ).mapInPandas(
-        batches, "media_id long, media binary"
-    )
-
-
-def text_to_jpeg_color_media(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    width: int = 48,
-    height: int = 24,
-) -> DataFrame:
-    """COLOR-JPEG twin of ``text_to_jpeg_media``: the same cycled-text
-    block values rendered as a GRAY-VALUED RGB raster (R=G=B per block)
-    and encoded through the full 4:4:4 color pipeline
-    (``jpegcodec.encode_jpeg_color`` — YCbCr transform, chroma quant +
-    Huffman tables, interleaved Y/Cb/Cr MCUs). Gray input keeps the color
-    codec exactly predictable (Cb=Cr=128 ⇒ all-zero chroma blocks), so
-    the ``multimodal_jpeg_color_decode`` oracle reuses the luma closed
-    form while the decode path exercises every color-specific moving part:
-    three DC predictor chains, both table families, and the YCbCr→RGB
-    transform."""
-    import numpy as np
-
-    from .jpegcodec import encode_jpeg_color
-
-    if width % 8 or height % 8:
-        raise ValueError("width/height must be multiples of 8")
-    n_blocks = (height // 8) * (width // 8)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                arr = np.frombuffer(str(text).encode("utf-8"), dtype=np.uint8)
-                vals = np.resize(arr, n_blocks).reshape(height // 8, width // 8)
-                gray = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                rgb = np.repeat(gray[:, :, None], 3, axis=2)
-                out.append((mid, encode_jpeg_color(rgb)))
-            yield pd.DataFrame(out, columns=["media_id", "media"])
-
-    return spread_small_input(
-        df.select(F.col(id_col), F.col(text_col)), id_col
-    ).mapInPandas(
-        batches, "media_id long, media binary"
-    )
-
-
-def text_to_jpeg420_media(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    width: int = 64,
-    height: int = 32,
-) -> DataFrame:
-    """4:2:0 SUBSAMPLED twin of ``text_to_jpeg_color_media``: cycled-text
-    values rendered as gray-valued 16×16 tiles (one value per MCU) and
-    encoded through the chroma-subsampled pipeline
-    (``jpegcodec.encode_jpeg_420`` — 2×2 chroma box-downsample,
-    four-Y-blocks-per-MCU interleave). Constant 16×16 tiles stay exactly
-    predictable end to end: each MCU's four luma blocks are constant (DC
-    only, the usual closed form), the box-average of a constant tile is
-    the same constant so the half-resolution chroma blocks are exactly
-    zero for gray input, and nearest-neighbor upsampling of a constant
-    plane is lossless — so the ``multimodal_jpeg420_decode`` oracle reuses
-    the luma closed form per tile while the decode exercises the full
-    subsampled MCU geometry (block interleave order, per-plane assembly,
-    upsample)."""
-    import numpy as np
-
-    from .jpegcodec import encode_jpeg_420
-
-    if width % 16 or height % 16:
-        raise ValueError("width/height must be multiples of 16")
-    n_tiles = (height // 16) * (width // 16)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                arr = np.frombuffer(str(text).encode("utf-8"), dtype=np.uint8)
-                vals = np.resize(arr, n_tiles).reshape(height // 16, width // 16)
-                gray = np.kron(vals, np.ones((16, 16), dtype=np.uint8))
-                rgb = np.repeat(gray[:, :, None], 3, axis=2)
-                out.append((mid, encode_jpeg_420(rgb)))
-            yield pd.DataFrame(out, columns=["media_id", "media"])
-
-    return spread_small_input(
-        df.select(F.col(id_col), F.col(text_col)), id_col
-    ).mapInPandas(
         batches, "media_id long, media binary"
     )
 
@@ -1219,7 +1031,7 @@ def text_to_mp3_media(
     text_col: str = "text",
     n_frames: int = 24,
 ) -> DataFrame:
-    """Deterministic MP3-fixture synthesizer (the ``text_to_jpeg_media``
+    """Deterministic MP3-fixture synthesizer (the ``text_to_bmp_media``
     pattern): cycle each document's UTF-8 bytes into ``n_frames`` frame
     specs — byte value v picks bitrate index ``1 + v % 14``, padding
     ``v % 2``, channel mode ``v % 4`` — and emit a real MPEG-1 Layer III

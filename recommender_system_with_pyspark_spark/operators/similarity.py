@@ -1347,8 +1347,13 @@ def semantic_dedup_pairs(
         "_u", F.transform(F.col("_v"), lambda x: x / F.col("_n"))
     )
 
+    # Seed only from finite rows: a NaN center makes every dot with it NaN,
+    # and np.argmax would send the whole catalog to that one cell (exact
+    # still, but no block is ever pruned). Spark orders NaN above +inf, so
+    # ``_n < inf`` drops NaN and infinite norms alike.
     seeds = (
-        unit.withColumn(
+        unit.filter(F.col("_n") < F.lit(math.inf))
+        .withColumn(
             "_h", F.md5(F.concat(F.lit(str(seed)), F.lit("|"), F.col("_id").cast("string")))
         )
         .orderBy("_h", "_id")
@@ -1356,6 +1361,8 @@ def semantic_dedup_pairs(
         .select("_u")
         .collect()
     )
+    if not seeds:  # no finite row, so no pair can reach the threshold
+        return df.sparkSession.createDataFrame([], "id_a long, id_b long, sim double")
     centers_np = np.array([r["_u"] for r in seeds], dtype="float64")  # k x d, driver-tiny
 
     # Assignment AND radius distance in ONE Arrow-batched pass (round 14,

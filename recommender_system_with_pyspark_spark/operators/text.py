@@ -786,7 +786,7 @@ def _validate_bpe_fast_path(merges: Sequence[tuple[str, str, str]]) -> bool:
 def bpe_table(
     trained: Sequence[tuple[int, str, int, str]],
 ) -> list[tuple[str, str, str]]:
-    """Convert ``bpe_train``/``bpe_train_batched`` output rows
+    """Convert ``bpe_train_batched`` output rows
     ``(step, pair, count, new_symbol)`` into the ``(left, right, out)``
     triples ``bpe_apply``/``bpe_decode`` consume. Pairs are always exactly
     two symbols (each a single char — initial alphabet or an earlier
@@ -963,99 +963,6 @@ def _fresh_symbol(step: int, pua_base: int) -> str:
     )
 
 
-def bpe_train(
-    docs: DataFrame,
-    n_merges: int = 3,
-    text_col: str = "text",
-    pua_base: int = 0xE100,
-) -> "list[tuple[int, str, int, str]]":
-    """Learn a byte-pair-encoding merge table FROM the corpus — the
-    training half of the tokenizer story (``bpe_apply`` is inference):
-    repeat ``n_merges`` times: count all adjacent symbol pairs across the
-    corpus, take the most frequent (ties → lexicographically smallest
-    pair: fully deterministic), replace it everywhere with a fresh
-    private-use symbol. Pairs containing whitespace are excluded (the
-    classic pre-tokenization boundary — merges never bridge words).
-
-    Scale shape per iteration: positional pair extraction is a
-    posexplode projection (no Python), pair counting is ONE map-side-
-    combined groupBy on 2-char keys, and the argmax is a 1-row TakeOrdered
-    — the only driver traffic is that single (pair, count) row, the same
-    k-row-per-iteration pattern as the oracle-checked k-means. The corpus
-    is cached between iterations so step k doesn't replay steps 0..k−1.
-
-    Returns ``[(step, pair, count, new_symbol), ...]`` (≤ n_merges rows —
-    shorter if the corpus runs out of repeated pairs). Convert with
-    ``bpe_table`` to the ``(left, right, out)`` triples ``bpe_apply``
-    consumes: outputs are fresh PUA chars, so the fast replace path is
-    always valid for a trained table.
-
-    REAL-VOCAB CEILING: each merge costs one pair-count round (one
-    groupBy + a 1-row argmax), so a 30–50k-merge production vocabulary
-    means 30–50k sequential Spark jobs — use ``bpe_train_batched``, which
-    learns up to ``batch_size`` pairwise-disjoint merges per round and
-    reduces the round count by that factor (it degenerates to exactly
-    this function at ``batch_size=1``).
-    """
-    cur = docs.select(F.col(text_col).alias("_s")).filter(F.length("_s") > 1)
-    # single-split fixture scans leave the whole per-round posexplode
-    # pair-count AND every corpus rewrite on one core — spread once up
-    # front (no-op at deployment scale); the rewrites inherit the layout.
-    # LAZY checkpoint (round 14): each round's argmax collect is the
-    # materializer for the corpus state it counts, so a round costs ONE
-    # job (count+rewrite fused) instead of two (eager rewrite job + count
-    # job). The previous round's blocks are released only AFTER the next
-    # state is materialized — unpersisting earlier would strand the lazy
-    # checkpoint's truncated lineage.
-    cur = local_ckpt_ser(spread_small_input(cur), eager=False)
-    prev: DataFrame | None = None
-    merges: list[tuple[int, str, int, str]] = []
-    try:
-        for step in range(n_merges):
-            # re-filter each round: a doc whose working string collapsed to
-            # ONE symbol has no pairs — without this, sequence(1, 0) is the
-            # DESCENDING [1, 0] and single-symbol docs contribute phantom
-            # 1-char "pairs" (DuckDB's range(1, 1) is empty, so the oracle
-            # would diverge the moment a corpus collapses that far)
-            pairs = (
-                cur.filter(F.length("_s") > 1)
-                .select(
-                    F.posexplode(F.sequence(F.lit(1), F.length("_s") - 1)).alias(
-                        "_p", "_i"
-                    ),
-                    F.col("_s"),
-                )
-                .select(F.col("_s").substr(F.col("_i"), F.lit(2)).alias("pair"))
-                .filter(~F.col("pair").contains(" "))
-            )
-            best = (
-                pairs.groupBy("pair")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .orderBy(F.desc("c"), F.asc("pair"))
-                .limit(1)
-                .collect()
-            )
-            if prev is not None:  # cur is materialized now — release prev
-                prev.unpersist()
-                prev = None
-            if not best or best[0]["c"] < 2:
-                break
-            pair, cnt = best[0]["pair"], int(best[0]["c"])
-            out = _fresh_symbol(step, pua_base)
-            merges.append((step, pair, cnt, out))
-            if len(merges) >= n_merges:
-                break  # the rewritten corpus would never be re-counted
-            nxt = local_ckpt_ser(cur.select(
-                F.replace(F.col("_s"), F.lit(pair), F.lit(out)).alias("_s")
-            ), eager=False)
-            prev, cur = cur, nxt
-    finally:
-        cur.unpersist()
-        if prev is not None:
-            prev.unpersist()
-    return merges
-
-
 def bpe_encode_cached(
     df: DataFrame,
     merges: Sequence[tuple[str, str, str]],
@@ -1068,7 +975,7 @@ def bpe_encode_cached(
     The chain/fold paths cost O(n_merges × doc_len) per document (one
     replace pass per merge rank). This encoder exploits the
     pre-tokenization contract instead (merges never bridge whitespace —
-    ``bpe_train`` excludes space-containing pairs), so encoding
+    ``bpe_train_batched`` excludes space-containing pairs), so encoding
     FACTORIZES over words: split on spaces, greedy-merge each word
     independently (lowest rank first, all occurrences left-to-right),
     join back. Per word the cost is O(len² · merges-present) on a
@@ -1164,14 +1071,17 @@ def bpe_train_batched(
     pua_base: int = 0xE100,
     candidate_factor: int = 8,
 ) -> "list[tuple[int, str, int, str]]":
-    """Distributed BPE training at REAL vocabulary scale: learn up to
-    ``batch_size`` merges per corpus pass instead of one, so a 30–50k
-    vocabulary costs thousands of rounds, not tens of thousands — the
-    standard batched-BPE trick, and the production path next to the
-    single-merge reference trainer ``bpe_train``.
+    """Learn a byte-pair-encoding merge table FROM the corpus — the
+    training half of the tokenizer story (``bpe_apply`` is inference).
+    Each round counts all adjacent symbol pairs across the corpus and
+    accepts up to ``batch_size`` merges, each replaced everywhere by a
+    fresh private-use symbol. Pairs containing whitespace are excluded
+    (the classic pre-tokenization boundary — merges never bridge words).
+    A 30–50k vocabulary therefore costs thousands of rounds, not tens of
+    thousands — the standard batched-BPE trick.
 
-    Per round: ONE positional pair-count (posexplode projection +
-    map-side-combined groupBy, identical to ``bpe_train``), collect the
+    Per round: ONE positional pair-count (posexplode projection, no
+    Python, + a map-side-combined groupBy on 2-char keys), collect the
     top ``batch_size × candidate_factor`` (pair, count) rows (the only
     driver traffic), then greedily accept candidates in (count desc,
     pair asc) order, SKIPPING any pair that shares a symbol with an
@@ -1184,12 +1094,13 @@ def bpe_train_batched(
     sound: replacing one accepted pair can neither create, destroy, nor
     overlap occurrences of another, so all accepted counts stay exact and
     the ≤``batch_size`` replaces compose into one projection applied in
-    a single corpus rewrite (localCheckpointed, as in ``bpe_train``).
+    a single corpus rewrite (lazily localCheckpointed between rounds).
 
-    Equivalence contract: at ``batch_size=1`` this IS ``bpe_train``
-    (same argmax, same tie-break, same output). At ``batch_size>1`` the
-    merge SET may differ from the strictly-sequential trainer's — a
-    skipped overlapping pair (e.g. ``he`` after ``th``) is deferred to
+    ``batch_size=1`` is classic sequential BPE: each round takes the
+    single most frequent pair (ties → lexicographically smallest pair:
+    fully deterministic) and recounts before the next merge. At
+    ``batch_size>1`` the merge SET may differ from the sequential one —
+    a skipped overlapping pair (e.g. ``he`` after ``th``) is deferred to
     the next round, where sequential BPE would have recounted it
     immediately — but every accepted count is exact for the corpus state
     it was measured on, the result is a valid greedy-family BPE table,
@@ -1197,7 +1108,10 @@ def bpe_train_batched(
     symbols in acceptance order, so ``bpe_table`` output always validates
     onto ``bpe_apply``'s fast path.
 
-    Returns ``[(step, pair, count, new_symbol), ...]`` like ``bpe_train``.
+    Returns ``[(step, pair, count, new_symbol), ...]`` (≤ n_merges rows —
+    shorter if the corpus runs out of repeated pairs). Convert with
+    ``bpe_table`` to the ``(left, right, out)`` triples ``bpe_apply``
+    consumes.
     """
     if batch_size < 1:
         raise ValueError("batch_size must be >= 1")
@@ -1206,13 +1120,20 @@ def bpe_train_batched(
     # explode and rewrite projection inherit the layout (no-op at scale).
     # LAZY checkpoint (round 14): the round's candidate collect is the
     # materializer for the corpus state it counts — one job per round
-    # (count+rewrite fused) instead of two; see bpe_train for the
-    # prev-release ordering contract.
+    # (count+rewrite fused) instead of two. The previous round's blocks
+    # are released only AFTER the next state is materialized —
+    # unpersisting earlier would strand the lazy checkpoint's truncated
+    # lineage.
     cur = local_ckpt_ser(spread_small_input(cur), eager=False)
     prev: DataFrame | None = None
     merges: list[tuple[int, str, int, str]] = []
     try:
         while len(merges) < n_merges:
+            # re-filter each round: a doc whose working string collapsed to
+            # ONE symbol has no pairs — without this, sequence(1, 0) is the
+            # DESCENDING [1, 0] and single-symbol docs contribute phantom
+            # 1-char "pairs" (DuckDB's range(1, 1) is empty, so the oracle
+            # would diverge the moment a corpus collapses that far)
             pairs = (
                 cur.filter(F.length("_s") > 1)
                 .select(
@@ -1368,7 +1289,7 @@ def bpe_decode(
     """Invert ``bpe_apply``: expand every merge output symbol back to its
     source pair, applying merges in REVERSE rank order so chained symbols
     unwrap outside-in (``the`` → ``th``+e → t+h+e). For fresh-output
-    tables (everything ``bpe_train`` produces, and everything the
+    tables (everything ``bpe_train_batched`` produces, and everything the
     fast-path validator accepts) this is an exact inverse — pinned
     corpus-wide by the ``bpe_roundtrip_docs`` oracle. Zero Python, zero
     shuffle, same 100 TB scan-parallel story as encoding: a

@@ -1,4 +1,4 @@
-"""Round-9 query surface (VERDICT r8 items #3/#4/#7/#8).
+"""Round-9 query surface (VERDICT r8 items #3/#7/#8).
 
 - ``bpe_train_batched_merges`` — the REAL-VOCAB trainer
   (``text.bpe_train_batched``): up to ``batch_size`` pairwise-disjoint
@@ -327,63 +327,6 @@ def bpe_encode_large_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bpe_tokens").cast("int").alias("bpe_tokens"),
         F.md5(F.col("bpe_text").cast("binary")).alias("bpe_md5"),
     )
-
-
-# Progressive-JPEG fixture geometry: 40×24 = 5×3 = 15 blocks per image.
-_JPGP_W, _JPGP_H = 40, 24
-_JPGP_BLOCKS = (_JPGP_W // 8) * (_JPGP_H // 8)  # 15
-
-_JPGP_BYTE_LIST = (
-    f"[ascii(x) for x in string_split(left(repeat(text, "
-    f"CAST(ceil({_JPGP_BLOCKS}.0 / length(text)) AS INT)), {_JPGP_BLOCKS}), '')]"
-)
-
-_JPGP_DECODED = (
-    "[least(255.0, greatest(0.0, 2 * round((v - 128) / 2.0) + 128)) "
-    f"for v in {_JPGP_BYTE_LIST}]"
-)
-
-
-@query(
-    "multimodal_jpeg_progressive_decode",
-    oracle=f"""
-    WITH px AS (
-        SELECT doc_id AS media_id, {_JPGP_DECODED} AS d
-        FROM documents WHERE length(text) > 0
-    )
-    SELECT media_id,
-           true AS decoded,
-           {_JPGP_W} AS width,
-           {_JPGP_H} AS height,
-           round(list_avg(d), 6) AS mean_r,
-           round(list_avg(d), 6) AS mean_g,
-           round(list_avg(d), 6) AS mean_b,
-           round(sqrt(greatest(
-               list_avg([x * x for x in d]) - list_avg(d) ^ 2, 0)), 6)
-               AS pixel_std
-    FROM px
-    """,
-)
-def multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PROGRESSIVE (SOF2) JPEG through the Arrow batch path — the dominant
-    real-corpus JPEG layout, closing VERDICT r8 #4 (the codec stub is now
-    MP3-only): document bytes become constant 8×8 blocks encoded as a
-    genuine multi-scan progressive stream (DC at Al=1 + one refinement
-    bit, AC spectral bands [1,5]/[6,63] at Al=2 refined at Al=1 and Al=0
-    — both T.81 progressive mechanisms on every image) and decoded back
-    by scan ACCUMULATION (``jpegcodec._decode_progressive``) into the
-    same coefficient array a baseline stream carries, then dequant/IDCT
-    once. Constant blocks keep only DC, so DuckDB predicts every decoded
-    pixel statistic in closed form — a scan-ordering bug, an EOB-run
-    slip, a successive-approximation bit dropped at any of the six scans,
-    or a DC-refinement polarity error all break the hash. Non-constant
-    rasters are pinned separately by baseline≡progressive bit-equality
-    tests (same quantized coefficients ⇒ same pixels)."""
-    from .operators import multimodal as M
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    media = M.text_to_jpeg_progressive_media(docs, width=_JPGP_W, height=_JPGP_H)
-    return M.extract_image_features(media)
 
 
 @query(

@@ -178,17 +178,13 @@ def test_mp3_filler_boundaries():
 # --- BPE lazy round checkpoints: trainer outputs unchanged --------------------
 
 def test_bpe_trainers_lazy_rounds_output(spark):
-    from recommender_system_with_pyspark_spark.operators.text import (
-        bpe_train,
-        bpe_train_batched,
-    )
+    from recommender_system_with_pyspark_spark.operators.text import bpe_train_batched
 
     docs = spark.createDataFrame(
         [(i, "the cat sat on the mat " * 4) for i in range(30)]
         + [(100 + i, "a stitch in time saves nine " * 3) for i in range(20)],
         "doc_id long, text string",
     )
-    seq = bpe_train(docs, n_merges=3)
-    assert len(seq) == 3 and all(c >= 2 for _, _, c, _ in seq)
-    # batch_size=1 degenerates to the sequential trainer exactly
-    assert bpe_train_batched(docs, n_merges=3, batch_size=1) == seq
+    seq = bpe_train_batched(docs, n_merges=3, batch_size=1)
+    # batch_size=1 reproduces the sequential trainer's table
+    assert seq == [(0, "at", 360, "\ue100"), (1, "he", 240, "\ue101"), (2, "t\ue101", 240, "\ue102")]

@@ -185,9 +185,8 @@ def test_bmp_rejects_non_bmp_and_unsupported():
 
     with _pytest.raises(ValueError, match="magic"):
         decode_bmp(b"\x89PNG\r\n\x1a\n" + b"\x00" * 64)
-    # JPEG decodes FOR REAL since round 8 — a truncated stream is a
-    # ValueError from the codec, not a stub miss
-    with _pytest.raises(ValueError):
+    # no JPEG codec ships: its magic gets the unsupported-format error
+    with _pytest.raises(NotImplementedError, match="JPEG"):
         decode_image(b"\xff\xd8\xff\xe0" + b"\x00" * 64)
     with _pytest.raises(NotImplementedError):
         decode_image(b"\x00GIF" + b"\x00" * 64)  # unknown container stays stubbed

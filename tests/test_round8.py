@@ -145,8 +145,11 @@ def test_png_rejects_unsupported_variants():
 
 def test_image_features_png_equal_bmp_and_flag_corrupt(spark):
     """Same pixel content through both containers must yield identical
-    feature rows; a corrupt blob flags decoded=false, never a task error."""
+    feature rows; an unsupported container (JPEG magic) or a truncated
+    blob flags decoded=false with null stats, never a task error or a
+    lost row."""
     from recommender_system_with_pyspark_spark.operators.multimodal import (
+        encode_bmp,
         extract_image_features,
         text_to_bmp_media,
         text_to_png_media,
@@ -161,11 +164,21 @@ def test_image_features_png_equal_bmp_and_flag_corrupt(spark):
     assert sorted(map(tuple, bmp), key=lambda t: t[0]) == sorted(
         map(tuple, png), key=lambda t: t[0]
     )
-    corrupt = spark.createDataFrame(
-        [(9, bytearray(b"\x89PNG\r\n\x1a\nbroken"))], "media_id long, media binary"
+    mixed = spark.createDataFrame(
+        [
+            (7, bytearray(encode_bmp(np.full((2, 4, 3), 9, np.uint8)))),
+            (8, bytearray(b"\xff\xd8\xff\xe0" + b"\x00" * 64)),
+            (9, bytearray(b"\x89PNG\r\n\x1a\nbroken")),
+        ],
+        "media_id long, media binary",
     )
-    row = extract_image_features(corrupt).collect()[0]
-    assert row["decoded"] is False and row["mean_r"] is None
+    rows = {r["media_id"]: r for r in extract_image_features(mixed).collect()}
+    assert sorted(rows) == [7, 8, 9]
+    assert rows[7]["decoded"] is True and rows[7]["width"] == 4
+    stats = ("width", "height", "mean_r", "mean_g", "mean_b", "pixel_std")
+    for mid in (8, 9):
+        assert rows[mid]["decoded"] is False
+        assert all(rows[mid][c] is None for c in stats)
 
 
 # -------------------------------------------------- funnel durable mode
@@ -222,153 +235,6 @@ def test_multimodal_png_decode_query_runs(spark, sf_tiny):
     assert all(0.0 <= r["mean_r"] <= 255.0 for r in rows)
 
 
-# ---------------------------------------------------------------- JPEG codec
-
-
-def test_jpeg_constant_blocks_decode_to_closed_form():
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        decode_jpeg_gray,
-        encode_jpeg_gray,
-    )
-
-    def predict(v: np.ndarray) -> np.ndarray:
-        s = v - 128.0
-        qc = np.sign(s / 2) * np.floor(np.abs(s / 2) + 0.5)
-        return np.clip(2 * qc + 128, 0, 255)
-
-    for seed in range(5):
-        rng = np.random.RandomState(seed)
-        vals = rng.randint(0, 256, size=(4, 8))
-        img = np.kron(vals, np.ones((8, 8))).astype(np.uint8)
-        dec = decode_jpeg_gray(encode_jpeg_gray(img))
-        assert np.array_equal(dec.astype(float), np.kron(predict(vals.astype(float)), np.ones((8, 8))))
-    for v in (0, 127, 128, 255):  # clamp + odd/even DC parity edges
-        dec = decode_jpeg_gray(encode_jpeg_gray(np.full((8, 8), v, np.uint8)))
-        assert np.all(dec.astype(float) == predict(np.float64(v)))
-
-
-def test_jpeg_lossy_roundtrip_bounded_and_general_content():
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        decode_jpeg_gray,
-        encode_jpeg_gray,
-    )
-
-    rng = np.random.RandomState(42)
-    img = rng.randint(0, 256, size=(24, 40)).astype(np.uint8)  # worst case: noise
-    dec = decode_jpeg_gray(encode_jpeg_gray(img))
-    assert dec.shape == img.shape and dec.dtype == np.uint8
-    # noise is JPEG's worst case; Annex-K tables bound the error well under
-    # the all-coefficients-clipped ceiling
-    assert np.abs(dec.astype(int) - img.astype(int)).max() < 128
-    x, y = np.meshgrid(np.arange(40), np.arange(24))
-    smooth = (128 + 60 * np.sin(x / 6) + 40 * np.cos(y / 4)).astype(np.uint8)
-    dec2 = decode_jpeg_gray(encode_jpeg_gray(smooth))
-    assert np.abs(dec2.astype(int) - smooth.astype(int)).mean() < 4
-
-
-def test_jpeg_rejects_unsupported_and_corrupt():
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        decode_jpeg_gray,
-        encode_jpeg_gray,
-    )
-
-    with pytest.raises(ValueError):
-        decode_jpeg_gray(b"\x00\x01not a jpeg")
-    with pytest.raises(ValueError):
-        encode_jpeg_gray(np.zeros((7, 8), np.uint8))  # h not multiple of 8
-    blob = bytearray(encode_jpeg_gray(np.full((8, 8), 77, np.uint8)))
-    sof = blob.find(b"\xff\xc0")
-    blob[sof + 1] = 0xC2  # masquerade as progressive
-    with pytest.raises(ValueError):
-        decode_jpeg_gray(bytes(blob))
-
-
-def test_decode_image_dispatches_jpeg_and_features_flag_corrupt(spark):
-    from recommender_system_with_pyspark_spark.operators import multimodal as M
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import encode_jpeg_gray
-
-    gray = np.kron(
-        np.array([[10, 200], [128, 55]]), np.ones((8, 8))
-    ).astype(np.uint8)
-    px = M.decode_image(encode_jpeg_gray(gray))
-    assert px.shape == (16, 16, 3)
-    assert np.array_equal(px[:, :, 0], px[:, :, 2])  # gray replicated per channel
-
-    rows = [(1, bytes(encode_jpeg_gray(gray))), (2, b"\xff\xd8garbage")]
-    df = spark.createDataFrame(rows, "media_id long, media binary")
-    out = {r["media_id"]: r for r in M.extract_image_features(df).collect()}
-    assert out[1]["decoded"] is True and out[1]["width"] == 16
-    assert out[2]["decoded"] is False and out[2]["mean_r"] is None
-
-
-def test_multimodal_jpeg_decode_query_runs(spark, sf_tiny):
-    from recommender_system_with_pyspark_spark.registry import QUERIES, load_all_queries
-
-    load_all_queries()
-    rows = QUERIES["multimodal_jpeg_decode"](spark, sf_tiny).collect()
-    assert rows and all(r["decoded"] for r in rows)
-    assert all(r["width"] == 64 and r["height"] == 32 for r in rows)
-    assert all(r["mean_r"] == r["mean_g"] == r["mean_b"] for r in rows)
-
-
-def test_jpeg_color_gray_fixture_exact_and_real_color_bounded():
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_color,
-    )
-
-    def predict(v: np.ndarray) -> np.ndarray:
-        s = v - 128.0
-        qc = np.sign(s / 2) * np.floor(np.abs(s / 2) + 0.5)
-        return np.clip(2 * qc + 128, 0, 255)
-
-    rng = np.random.RandomState(11)
-    vals = rng.randint(0, 256, size=(3, 4))
-    gray_rgb = np.repeat(
-        np.kron(vals, np.ones((8, 8))).astype(np.uint8)[:, :, None], 3, axis=2
-    )
-    dec = decode_jpeg(encode_jpeg_color(gray_rgb))
-    assert dec.shape == gray_rgb.shape
-    pred = np.kron(predict(vals.astype(float)), np.ones((8, 8)))
-    for ch in range(3):  # R=G=B -> zero chroma -> luma closed form per channel
-        assert np.array_equal(dec[:, :, ch].astype(float), pred)
-
-    col = rng.randint(0, 256, size=(16, 24, 3)).astype(np.uint8)
-    dec2 = decode_jpeg(encode_jpeg_color(col))  # genuine color content
-    assert dec2.shape == col.shape
-    assert np.abs(dec2.astype(int) - col.astype(int)).max() < 192  # coarse chroma
-    const = np.kron(
-        rng.randint(0, 256, size=(2, 3, 3)), np.ones((8, 8, 1))
-    ).astype(np.uint8)
-    dec3 = decode_jpeg(encode_jpeg_color(const))
-    assert np.abs(dec3.astype(int) - const.astype(int)).max() <= 3
-
-
-def test_jpeg_color_rejects_gray_entry_and_bad_shapes():
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        decode_jpeg_gray,
-        encode_jpeg_color,
-    )
-
-    rgb = np.full((8, 8, 3), 90, np.uint8)
-    with pytest.raises(ValueError):
-        decode_jpeg_gray(encode_jpeg_color(rgb))  # color stream, gray entry
-    with pytest.raises(ValueError):
-        encode_jpeg_color(np.zeros((8, 8), np.uint8))  # missing channel dim
-    with pytest.raises(ValueError):
-        encode_jpeg_color(np.zeros((12, 8, 3), np.uint8))  # h not 8-aligned
-
-
-def test_multimodal_jpeg_color_decode_query_runs(spark, sf_tiny):
-    from recommender_system_with_pyspark_spark.registry import QUERIES, load_all_queries
-
-    load_all_queries()
-    rows = QUERIES["multimodal_jpeg_color_decode"](spark, sf_tiny).collect()
-    assert rows and all(r["decoded"] for r in rows)
-    assert all(r["width"] == 48 and r["height"] == 24 for r in rows)
-    assert all(r["mean_r"] == r["mean_g"] == r["mean_b"] for r in rows)
-
-
 def test_chunk_documents_boundaries_and_overlap(spark):
     from recommender_system_with_pyspark_spark.operators.text import chunk_documents
 
@@ -400,91 +266,6 @@ def test_chunk_documents_no_shuffle_plan(spark):
     df = spark.createDataFrame([(1, "hello world")], "doc_id long, text string")
     plan = chunk_documents(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # row-parallel: no shuffle anywhere
-
-
-# ---------------------------------------------------------------------------
-# 4:2:0 subsampled JPEG (round-8b: the dominant real-corpus JPEG layout)
-
-
-def test_jpeg_420_constant_tiles_exact_closed_form():
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_420,
-    )
-
-    def predict(v: np.ndarray) -> np.ndarray:
-        s = v - 128.0
-        qc = np.sign(s / 2) * np.floor(np.abs(s / 2) + 0.5)
-        return np.clip(2 * qc + 128, 0, 255)
-
-    rng = np.random.RandomState(7)
-    vals = rng.randint(0, 256, size=(2, 4)).astype(np.float64)
-    gray = np.kron(vals, np.ones((16, 16))).astype(np.uint8)
-    rgb = np.repeat(gray[:, :, None], 3, axis=2)
-    dec = decode_jpeg(encode_jpeg_420(rgb))
-    assert dec.shape == rgb.shape
-    expect = np.repeat(
-        np.kron(predict(vals), np.ones((16, 16)))[:, :, None], 3, axis=2
-    )
-    # constant 16x16 tiles survive downsample/upsample losslessly, so the
-    # 4:2:0 pipeline hits the same DC-only closed form as 4:4:4
-    assert np.array_equal(dec.astype(np.float64), expect)
-
-
-def test_jpeg_420_smooth_content_bounded_error():
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_420,
-    )
-
-    yy, xx = np.mgrid[0:64, 0:48]
-    smooth = np.stack(
-        [((yy * 2 + xx) // 2) % 256, (xx * 3) % 256, (yy * 3) % 256], axis=-1
-    ).astype(np.uint8)
-    dec = decode_jpeg(encode_jpeg_420(smooth))
-    assert dec.shape == smooth.shape
-    # chroma is half-resolution so the bound is looser than 4:4:4, but a
-    # broken block interleave or plane offset produces errors of ~100+
-    assert np.abs(dec.astype(int) - smooth.astype(int)).mean() < 8.0
-
-
-def test_jpeg_420_vs_444_same_gray_fixture_agree():
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_420,
-        encode_jpeg_color,
-    )
-
-    rng = np.random.RandomState(13)
-    vals = rng.randint(0, 256, size=(1, 2)).astype(np.float64)
-    gray = np.kron(vals, np.ones((16, 16))).astype(np.uint8)
-    rgb = np.repeat(gray[:, :, None], 3, axis=2)
-    # same constant-tile gray image through both color pipelines: identical
-    # decoded rasters (chroma zero in both; luma closed form per tile)
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg_420(rgb)), decode_jpeg(encode_jpeg_color(rgb))
-    )
-
-
-def test_jpeg_420_rejects_bad_shapes():
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        encode_jpeg_420,
-    )
-
-    with pytest.raises(ValueError):
-        encode_jpeg_420(np.zeros((8, 16, 3), dtype=np.uint8))  # h % 16
-    with pytest.raises(ValueError):
-        encode_jpeg_420(np.zeros((16, 16), dtype=np.uint8))  # not RGB
-
-
-def test_multimodal_jpeg420_decode_query_runs(spark, sf_tiny):
-    from recommender_system_with_pyspark_spark.registry import QUERIES, load_all_queries
-
-    load_all_queries()
-    rows = QUERIES["multimodal_jpeg420_decode"](spark, sf_tiny).collect()
-    assert rows and all(r["decoded"] for r in rows)
-    assert all(r["width"] == 64 and r["height"] == 32 for r in rows)
-    assert all(r["mean_r"] == r["mean_g"] == r["mean_b"] for r in rows)
 
 
 # ---------------------------------------------------------------------------
@@ -685,14 +466,14 @@ def test_bpe_train_learns_expected_merges_and_feeds_apply(spark):
     from recommender_system_with_pyspark_spark.operators.text import (
         _validate_bpe_fast_path,
         bpe_apply,
-        bpe_train,
+        bpe_train_batched,
     )
 
     df = spark.createDataFrame(
         [("the cat and the hat",), ("that thing and the other thing",)],
         "text string",
     )
-    merges = bpe_train(df, n_merges=3)
+    merges = bpe_train_batched(df, n_merges=3, batch_size=1)
     # corpus 'th' count: the,the (doc1) + that,thing,the,other,thing = 7
     steps = [(s, p, c) for s, p, c, _o in merges]
     assert steps[0] == (0, "th", 7)
@@ -708,10 +489,10 @@ def test_bpe_train_learns_expected_merges_and_feeds_apply(spark):
 
 
 def test_bpe_train_stops_when_no_repeats(spark):
-    from recommender_system_with_pyspark_spark.operators.text import bpe_train
+    from recommender_system_with_pyspark_spark.operators.text import bpe_train_batched
 
     df = spark.createDataFrame([("abcdefg",)], "text string")
-    merges = bpe_train(df, n_merges=5)
+    merges = bpe_train_batched(df, n_merges=5, batch_size=1)
     assert merges == []  # every pair occurs once -> below the c>=2 floor
 
 
@@ -948,12 +729,12 @@ def test_rolling_origin_folds_causality_and_coverage(spark):
 
 
 def test_bpe_train_no_phantom_pairs_on_collapsed_docs(spark):
-    from recommender_system_with_pyspark_spark.operators.text import bpe_train
+    from recommender_system_with_pyspark_spark.operators.text import bpe_train_batched
 
     # after round 0 rewrites 'ab'->E100 those docs are single-symbol; the
     # descending-sequence phantom pair bug would learn a 1-char "pair" next
     df = spark.createDataFrame([("ab",), ("ab",), ("cd",)], "text string")
-    merges = bpe_train(df, n_merges=2)
+    merges = bpe_train_batched(df, n_merges=2, batch_size=1)
     assert merges == [(0, "ab", 2, "\uE100")]
     assert all(len(p) == 2 for _s, p, _c, _o in merges)
 
@@ -972,26 +753,6 @@ def test_mutual_information_null_categories_counted(spark):
     cells = [(2 / 6, 2 / 6, 3 / 6), (2 / 6, 2 / 6, 3 / 6), (1 / 6, 2 / 6, 3 / 6), (1 / 6, 2 / 6, 3 / 6)]
     mi = sum(pxy * math.log2(pxy / (px * py)) for pxy, px, py in cells)
     assert r["mi_bits"] == pytest.approx(round(mi, 6), abs=2e-6)
-
-
-def test_jpeg_restart_interval_roundtrip_and_sequence_check():
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_gray,
-    )
-
-    rng = np.random.RandomState(3)
-    img = rng.randint(0, 256, size=(24, 40)).astype(np.uint8)  # 15 MCUs
-    plain = decode_jpeg(encode_jpeg_gray(img))
-    for ri in (1, 3, 7, 14):
-        blob = encode_jpeg_gray(img, restart_interval=ri)
-        assert b"\xff\xdd" in blob  # DRI segment present
-        assert np.array_equal(decode_jpeg(blob), plain)
-    corrupted = bytearray(encode_jpeg_gray(img, restart_interval=2))
-    i = corrupted.index(b"\xff\xd0", 20)
-    corrupted[i + 1] = 0xD5
-    with pytest.raises(ValueError, match="out of sequence"):
-        decode_jpeg(bytes(corrupted))
 
 
 def test_strip_boilerplate_empty_docs_do_not_dilute_threshold(spark):

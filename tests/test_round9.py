@@ -14,7 +14,6 @@ from recommender_system_with_pyspark_spark.operators.text import (
     bpe_apply,
     bpe_decode,
     bpe_table,
-    bpe_train,
     bpe_train_batched,
 )
 
@@ -24,8 +23,10 @@ def _corpus(spark, texts):
 
 
 def test_bpe_train_batched_batch1_equals_sequential(spark, sf_tiny):
+    # the sequential (one merge per recount) trainer's output on this corpus
+    sequential = [(0, "er", 4650, "\ue100"), (1, "or", 2880, "\ue101"), (2, "in", 2858, "\ue102")]
     docs = load_table(spark, sf_tiny, "documents").filter(F.length("text") > 0)
-    assert bpe_train(docs, n_merges=3) == bpe_train_batched(docs, n_merges=3, batch_size=1)
+    assert bpe_train_batched(docs, n_merges=3, batch_size=1) == sequential
 
 
 def test_bpe_train_batched_skips_overlapping_pairs(spark):
@@ -56,7 +57,7 @@ def test_bpe_train_batched_per_round_disjointness(spark, sf_tiny):
 def test_bpe_table_feeds_apply_directly(spark):
     # the ADVICE r8 gap: trained 4-tuples must have a supported conversion
     docs = _corpus(spark, ["the theme then"] * 4)
-    merges = bpe_train(docs, n_merges=3)
+    merges = bpe_train_batched(docs, n_merges=3, batch_size=1)
     enc = bpe_apply(docs, bpe_table(merges))
     assert enc.filter(F.col("bpe_tokens") <= 0).count() == 0
 
@@ -213,123 +214,6 @@ def test_hard_negatives_excludes_positives(spark, sf_tiny):
         per_q.setdefault(r["query_id"], []).append(r["rank"])
     for q, ranks in per_q.items():
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
-
-
-# ------------------------------------------------------ progressive JPEG
-
-
-def _rasters():
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    return {
-        "const": np.full((32, 64), 137, np.uint8),
-        "gradient": (np.add.outer(np.arange(32) * 4, np.arange(64) * 2) % 256).astype(
-            np.uint8
-        ),
-        "noise": rng.randint(0, 256, (40, 48)).astype(np.uint8),
-        "extremes": np.where(rng.rand(24, 24) < 0.5, 0, 255).astype(np.uint8),
-    }
-
-
-def test_progressive_equals_baseline_gray():
-    """Progressive transmits the identical quantized coefficient array, so
-    decoded pixels must equal the baseline decode BIT-FOR-BIT — on
-    constant, smooth, noisy, and clipping rasters (the noise cases drive
-    every successive-approximation path: new-nonzero insertions at all
-    three Al levels, correction bits, ZRL-in-refinement, EOB runs)."""
-    import numpy as np
-
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_gray,
-        encode_jpeg_progressive,
-    )
-
-    for name, px in _rasters().items():
-        base = decode_jpeg(encode_jpeg_gray(px))
-        prog = decode_jpeg(encode_jpeg_progressive(px))
-        assert np.array_equal(base, prog), name
-
-
-def test_progressive_equals_baseline_color():
-    import numpy as np
-
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_color,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.RandomState(11)
-    px = rng.randint(0, 256, (32, 32, 3)).astype(np.uint8)
-    base = decode_jpeg(encode_jpeg_color(px))
-    prog = decode_jpeg(encode_jpeg_progressive(px))
-    assert np.array_equal(base, prog)
-
-
-def test_progressive_stream_structure():
-    """The emitted stream must actually BE progressive: SOF2 marker and
-    one SOS per scan (6 for grayscale: DC first, 2 AC bands, 2 AC
-    refinements, DC refinement)."""
-    import numpy as np
-
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        encode_jpeg_progressive,
-    )
-
-    data = encode_jpeg_progressive(np.full((16, 16), 99, np.uint8))
-    assert b"\xff\xc2" in data and b"\xff\xc0" not in data
-    assert data.count(b"\xff\xda") == 6
-    color = encode_jpeg_progressive(
-        np.zeros((16, 16, 3), np.uint8) + np.uint8(42)
-    )
-    assert color.count(b"\xff\xda") == 2 + 3 * 4  # 2 DC scans + 4 AC scans/comp
-
-
-def test_progressive_420_equals_baseline_420():
-    """Real-web progressive layout: 4:2:0 chroma. The DC scans interleave
-    16-pixel MCUs (4 Y + Cb + Cr) while the AC scans run non-interleaved
-    over each component's own half-resolution grid — the decoder's
-    distinct interleaved-vs-exact block-grid geometry. Must equal the
-    baseline 4:2:0 decode bit-for-bit."""
-    import numpy as np
-
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_420,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.RandomState(3)
-    for px in (
-        np.full((32, 48, 3), 142, np.uint8),
-        rng.randint(0, 256, (32, 48, 3)).astype(np.uint8),
-    ):
-        base = decode_jpeg(encode_jpeg_420(px))
-        prog = decode_jpeg(encode_jpeg_progressive(px, subsample=True))
-        assert np.array_equal(base, prog)
-    stream = encode_jpeg_progressive(rng.randint(0, 256, (16, 16, 3)).astype(np.uint8),
-                                     subsample=True)
-    assert b"\xff\xc2" in stream
-    assert stream.count(b"\xff\xda") == 14  # 2 DC + 4 AC scans x 3 comps
-
-
-def test_decode_image_routes_progressive():
-    import numpy as np
-
-    from recommender_system_with_pyspark_spark.operators.jpegcodec import (
-        encode_jpeg_progressive,
-    )
-    from recommender_system_with_pyspark_spark.operators.multimodal import (
-        decode_image,
-    )
-
-    px = np.full((8, 16), 200, np.uint8)
-    out = decode_image(encode_jpeg_progressive(px))
-    assert out.shape == (8, 16, 3)
-    # constant block closed form: clamp(2*round((200-128)/2)+128) = 200
-    assert int(out[0, 0, 0]) == 200
 
 
 def test_training_pipeline_e2e_funnel_is_monotone(spark, sf_tiny):

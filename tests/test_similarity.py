@@ -46,12 +46,15 @@ def test_embedding_near_dup_threshold(spark):
     assert pairs == {(0, 1)}
 
 
-def test_exact_near_dup_paths_ignore_a_nan_vector(spark):
+def test_exact_near_dup_paths_ignore_a_nan_vector(spark, monkeypatch):
     """One NaN row among finite vectors: all three exact near-dup paths
     return exactly the finite rows' pairs. Before, the fold paired the NaN
     row with every vector (Spark orders NaN above every double), and
     ``semantic_dedup_pairs`` crashed on a null cell radius whenever md5
-    seeding picked the NaN row as a center."""
+    seeding picked the NaN row as a center. The NaN row is never a center
+    now, so the finite rows spread over more than one cell (at
+    ``n_cells=3`` unfiltered md5 seeding picks row 5 at seeds 1, 3 and 4,
+    and every finite row then argmaxes to it)."""
     nan_row = spark.createDataFrame(
         [(5, [float("nan")] * 8)], "vec_id long, embedding array<double>"
     )
@@ -64,10 +67,26 @@ def test_exact_near_dup_paths_ignore_a_nan_vector(spark):
     assert [p[:2] for p in finite] == [(0, 1)]
     assert pairs(S.embedding_near_dup(df, threshold=0.95)) == finite
     assert pairs(S.embedding_near_dup_blocked(df, threshold=0.95, n_chunks=2)) == finite
+
+    # observe the cell assignment through the frame the operator checkpoints
+    assigned = []
+    ckpt = S.local_ckpt_ser
+
+    def capture(frame, *args, **kwargs):
+        if "_cell" in frame.columns:
+            assigned.append(frame)
+        return ckpt(frame, *args, **kwargs)
+
+    monkeypatch.setattr(S, "local_ckpt_ser", capture)
     for seed in (1, 2, 3, 4):
         for n_cells in (1, 2, 3):
             got = S.semantic_dedup_pairs(df, threshold=0.95, n_cells=n_cells, seed=seed)
             assert pairs(got) == finite, (seed, n_cells)
+            if n_cells == 3:
+                cells = {r["_cell"] for r in assigned[-1].collect() if r["_id"] != 5}
+                assert len(cells) > 1, (seed, n_cells)
+    # with no finite row to seed from, no pair can qualify
+    assert S.semantic_dedup_pairs(nan_row, n_cells=2).collect() == []
 
 
 def test_embedding_near_dup_blocked_matches_pair_join(spark, sf_tiny):

@@ -25,7 +25,6 @@ from recommender_system_with_pyspark_spark.operators.text import (
     bpe_apply,
     bpe_decode,
     bpe_table,
-    bpe_train,
     bpe_train_batched,
 )
 
@@ -34,7 +33,7 @@ docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
 print(f"docs: {docs.count()} rows at {sf_dir}", flush=True)
 
 t0 = time.time()
-seq3 = bpe_train(docs, n_merges=3)
+seq3 = bpe_train_batched(docs, n_merges=3, batch_size=1)
 t_seq3 = time.time() - t0
 print(f"sequential 3 merges: {t_seq3:.1f}s  {[(p, c) for _, p, c, _ in seq3]}", flush=True)
 
